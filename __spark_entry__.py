@@ -17,11 +17,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from collections.abc import Callable
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ganda_spark import spec
+from ganda_spark import cache, spec
 from ganda_spark.config import EngineConfig
 from ganda_spark.functions.transforms import (
     body_output,
@@ -96,12 +97,19 @@ def entry(spark: SparkSession) -> DataFrame:
     return queries()["k1_crawl_pipeline"](spark, "/root/testdata/sf0.001")
 
 
+# The last built entry's cache scope, closed when the next entry starts:
+# materialize an entry's DataFrame before building the next one.
+_ENTRY_SCOPE = ExitStack()
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from ganda_spark.session import ensure_shipped
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             ensure_shipped(spark)  # UDF workers must import ganda_spark
+            _ENTRY_SCOPE.close()
+            _ENTRY_SCOPE.enter_context(cache.scope())
             return fn(spark, sf_dir)
 
         run.__name__ = fn.__name__
@@ -517,7 +525,7 @@ def q_robots_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: parsed feeds three branches (budgets, the gate broadcast,
     # the final join) — each re-ran the hosts-distinct shuffle over the
     # frontier plus the parse fold (guide §5)
-    parsed = parse_robots_txt(hosts.withColumn("robots_txt", txt)).persist()
+    parsed = cache.persist(parse_robots_txt(hosts.withColumn("robots_txt", txt)))
     budgets = crawl_delay_budgets(parsed, window_ms=1000, default_budget=50)
     _allowed, blocked = robots_gate(frontier, parsed)
     n_blocked = blocked.groupBy("host").agg(F.count(F.lit(1)).alias("n_blocked"))
@@ -932,9 +940,7 @@ def q_f5_throttle_waves(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     throttle = 500  # rows per second
     frontier = seed_frontier(spark, sf_dir)
-    # one-shot query: the rank cache lives for the session (loop callers
-    # pass cache_out and unpersist per generation — politeness.pop_batch)
-    ranked, _rank_cache = with_global_rank(frontier, ["seq"], 16, rank_col="_rn")
+    ranked = with_global_rank(frontier, ["seq"], 16, rank_col="_rn")
     return ranked.select(
         "url",
         F.floor((F.col("_rn") - 1) / throttle).cast("long").alias("wave"),
@@ -1111,9 +1117,9 @@ def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # makes the chains run ONCE, the gate a trivial filter over the cache
     # scan — and the cache still serves both the keeper aggregate and the
     # final join (the original guide-§5 reason for the persist).
-    scored = quality_metrics(lang_id(corpus)).select(
+    scored = cache.persist(quality_metrics(lang_id(corpus)).select(
         "doc_id", "text", "lang_guess", "quality_score_bp", "n_words"
-    ).persist()
+    ))
     gated = scored.where(
         (F.col("quality_score_bp") >= 5000) & (F.col("lang_guess") == "en")
     )
@@ -1219,18 +1225,30 @@ SELECT doc_id, {_duck_sig_cols()} FROM sh
 # --- minhash + LSH candidate pairs + jaccard verify --------------------------
 
 
+def _persisted_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, band_0..band_3) of k=8 minhash, 2 rows per band, persisted:
+    signatures are tiny relative to the corpus (k×8 bytes/doc), and
+    without the persist the 4-band self-join re-derives them from the raw
+    text 20× (plan audit: 20 FileScans → 2). At 100 TB this is a
+    signatures table written once, joined many times."""
+    return cache.persist(
+        lsh_band_hashes(minhash_signatures(docs, k=8), k=8, rows_per_band=2).select(
+            "doc_id", "band_0", "band_1", "band_2", "band_3"
+        )
+    )
+
+
+def _near_bands(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Persisted (doc_id, shingles) of the near-duplicate corpus and its
+    _persisted_bands — shingles and band hashes materialize ONCE."""
+    docs = cache.persist(
+        with_shingles(_near_corpus(spark, sf_dir)).select("doc_id", "shingles")
+    )
+    return docs, _persisted_bands(docs)
+
+
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Materialize shingles + band hashes ONCE: signatures are tiny relative
-    # to the corpus (k×8 bytes/doc), and without this the 4-band self-join
-    # re-derives them from the raw text 20× (plan audit: 20 FileScans → 2).
-    # At 100 TB this is a signatures table written once, joined many times.
-    docs = with_shingles(_near_corpus(spark, sf_dir)).select(
-        "doc_id", "shingles"
-    ).persist()
-    sigs = minhash_signatures(docs, k=8)
-    banded = lsh_band_hashes(sigs, k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
+    docs, banded = _near_bands(spark, sf_dir)
     # r7 (guide §8): candidate generation + verify FUSED per bucket
     # (lsh_verified_pairs) — the two-step pairs→verify flow shuffled both
     # shingle arrays as payload on every candidate pair row (4.5 GB /
@@ -1319,19 +1337,13 @@ def q_dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the sample bounds the m² truth stage (m is the
     evaluator's knob, like sim_recall_report's persisted truth); the
     detection stages are the production operators unchanged."""
-    from ganda_spark.operators.dedup import (
-        jaccard_verify,
-        lsh_band_hashes,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from ganda_spark.operators.dedup import jaccard_verify, lsh_candidate_pairs
     from ganda_spark.operators.sampling import sample_hash_col
 
-    sample = (
+    sample = cache.persist(
         with_shingles(_near_corpus(spark, sf_dir))
         .where(sample_hash_col("doc_id", 6000, salt="lshrecall:"))
         .select("doc_id", "shingles")
-        .persist()
     )
     all_pairs = (
         sample.select(F.col("doc_id").alias("id_a"))
@@ -1341,9 +1353,7 @@ def q_dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = jaccard_verify(all_pairs, sample, broadcast_pairs=True).where(
         F.col("jaccard") >= 0.5
     )
-    banded = lsh_band_hashes(
-        minhash_signatures(sample, k=8), k=8, rows_per_band=2
-    ).select("doc_id", "band_0", "band_1", "band_2", "band_3").persist()
+    banded = _persisted_bands(sample)
     det = lsh_candidate_pairs(banded, k=8, rows_per_band=2, broadcast_bands=True)
     detc = lsh_candidate_pairs(
         banded, k=8, rows_per_band=2, broadcast_bands=True, max_bucket=3
@@ -1428,13 +1438,7 @@ def q_dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max_bucket=3): buckets carrying no discrimination are dropped before
     pair generation; the oracle drops the same buckets via HAVING, so the
     cap SEMANTICS (not just the happy path) are hash-verified."""
-    docs = with_shingles(_near_corpus(spark, sf_dir)).select(
-        "doc_id", "shingles"
-    ).persist()
-    sigs = minhash_signatures(docs, k=8)
-    banded = lsh_band_hashes(sigs, k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
+    docs, banded = _near_bands(spark, sf_dir)
     # r7 (guide §8): fused per-bucket verify — see q_dedup_minhash_lsh;
     # the cap drops the same buckets via the same histogram semi-join
     from ganda_spark.operators.dedup import lsh_verified_pairs
@@ -2134,13 +2138,12 @@ def q_corpus_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once, the gate is a trivial filter over the cache scan — and the
     # cache still serves the keeper aggregate AND the kept semi-join
     # (the original guide-§5 reason it was persisted at all).
-    scored = (
+    scored = cache.persist(
         gopher_quality(normed, text_col="text_norm")
         .select(
             "doc_id", "text_norm",
             "alpha_word_bp", "stop_hits", "n_words", "dup_line_bp",
         )
-        .persist()
     )
     gated = scored.where(
         (F.col("alpha_word_bp") >= 8000)
@@ -3351,15 +3354,10 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_pair_bound,
     )
 
-    docs = with_shingles(_near_corpus(spark, sf_dir)).select(
-        "doc_id", "shingles"
-    ).persist()
     # one signature/band pass over corpus ∪ batch, split by id — at scale
     # the corpus side is the prebuilt signature table and only the batch
     # side is computed fresh; here both derive from one cached pass
-    banded = lsh_band_hashes(minhash_signatures(docs, k=8), k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
+    docs, banded = _near_bands(spark, sf_dir)
     banded_base = banded.where(F.col("doc_id") < 100000)
     banded_new = banded.where(F.col("doc_id") >= 100000)
     ub = incremental_pair_bound(banded_base, banded_new)
@@ -3385,12 +3383,7 @@ def _sql_minhash_incremental() -> str:
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ganda_spark.operators.dedup import connected_components, lsh_verified_pairs
 
-    docs = with_shingles(_near_corpus(spark, sf_dir)).select(
-        "doc_id", "shingles"
-    ).persist()
-    banded = lsh_band_hashes(minhash_signatures(docs, k=8), k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
+    docs, banded = _near_bands(spark, sf_dir)
     # r7 (guide §8): fused per-bucket verify — see q_dedup_minhash_lsh
     verified = lsh_verified_pairs(banded, docs, k=8, rows_per_band=2).where(
         F.col("jaccard") >= 0.5
@@ -3445,10 +3438,8 @@ def q_curate_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = _near_corpus(spark, sf_dir)
-    docs = with_shingles(corpus).select("doc_id", "shingles").persist()
-    banded = lsh_band_hashes(minhash_signatures(docs, k=8), k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
+    docs = cache.persist(with_shingles(corpus).select("doc_id", "shingles"))
+    banded = _persisted_bands(docs)
     # r7 (guide §8): fused per-bucket verify — see q_dedup_minhash_lsh
     verified = lsh_verified_pairs(banded, docs, k=8, rows_per_band=2).where(
         F.col("jaccard") >= 0.5
@@ -4410,13 +4401,10 @@ def q_dedup_media_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "substring(payload, 1, CAST((length(payload) DIV 64) * 64 AS INT))"
         ).alias("payload"),
     )
-    sh = with_media_shingles(bt.unionByName(copies)).select(
-        "doc_id", "shingles"
-    ).persist()
-    sigs = minhash_signatures(sh, k=8)
-    banded = lsh_band_hashes(sigs, k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
+    sh = cache.persist(
+        with_media_shingles(bt.unionByName(copies)).select("doc_id", "shingles")
+    )
+    banded = _persisted_bands(sh)
     # r7 (guide §8): fused per-bucket verify — see q_dedup_minhash_lsh
     from ganda_spark.operators.dedup import lsh_verified_pairs
 
@@ -4475,9 +4463,9 @@ def q_curate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fill AND the assignment scan inside semantic_dedup_capped — without
     # the cache each consumer re-runs embed_text's per-dim folds over the
     # corpus (measured ~9 s per evaluation at 10×)
-    emb = embed_text(corpus).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
-    ).persist()
+    emb = cache.persist(
+        embed_text(corpus).select(F.col("doc_id").alias("vec_id"), "embedding")
+    )
     # GUARDED default (VERDICT r5 #1): the user-facing curation entry
     # composes the capped operator so boilerplate-heavy corpora never pay
     # the unguarded pair scan; max_list=4096 never triggers at oracle
@@ -4796,13 +4784,10 @@ def q_dedup_spans_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("dup-"), num.cast("string")).alias("doc_id"),
         F.filter(F.col("spans"), lambda s: s["kind"] != "image").alias("spans"),
     )
-    sh = with_span_shingles(docs.unionByName(near)).select(
-        "doc_id", "shingles"
-    ).persist()
-    sigs = minhash_signatures(sh, k=8)
-    banded = lsh_band_hashes(sigs, k=8, rows_per_band=2).select(
-        "doc_id", "band_0", "band_1", "band_2", "band_3"
-    ).persist()
+    sh = cache.persist(
+        with_span_shingles(docs.unionByName(near)).select("doc_id", "shingles")
+    )
+    banded = _persisted_bands(sh)
     # r7 (guide §8): fused per-bucket verify — see q_dedup_minhash_lsh
     # (string doc ids: ASCII, so Python and UTF8-binary order agree)
     from ganda_spark.operators.dedup import lsh_verified_pairs
@@ -5183,7 +5168,7 @@ def q_f8_rfc_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the parsed rules feed two branches (the gate's broadcast
     # side and the crawl-delay join) — each re-ran the hosts-distinct
     # shuffle over the frontier plus the parse fold (guide §5)
-    parsed = parse_robots_rfc(robots, agent="ganda-spark").persist()
+    parsed = cache.persist(parse_robots_rfc(robots, agent="ganda-spark"))
     # ONE rule-match pass (rfc_robots_tag): the allowed/blocked split
     # reassembled by union evaluated the per-URL match fold twice
     # (guide §2.4); identical rows, plan halved — see OPTIMIZATION_r07.md

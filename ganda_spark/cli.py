@@ -23,6 +23,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
 from ganda_spark.config import EngineConfig, parse_header
 
 
@@ -154,17 +155,17 @@ def main(argv: list[str] | None = None) -> int:
     def fetch_and_emit(batch_df) -> None:
         # cache the WHOLE fetch result: ok/status splits must come from one
         # execution (duplicate real HTTP requests otherwise)
-        fetched = fetcher(batch_df.repartition(parts), cfg).cache()
-        ok = fetched.where(F.col("fetch_error").isNull())
-        if args.output_directory:
-            write_files(ok, cfg, args.output_directory)
-            # reference logs retry-exhausted URLs to stderr in ALL modes
-            # (requests/requests.go:75-76) — include error rows here too
-            emit_status_log(fetched, cfg)
-        else:
-            emit_stdout(ok, cfg)
-            emit_status_log(fetched, cfg)
-        fetched.unpersist()
+        with cache.scope():
+            fetched = cache.persist(fetcher(batch_df.repartition(parts), cfg))
+            ok = fetched.where(F.col("fetch_error").isNull())
+            if args.output_directory:
+                write_files(ok, cfg, args.output_directory)
+                # reference logs retry-exhausted URLs to stderr in ALL modes
+                # (requests/requests.go:75-76) — include error rows here too
+                emit_status_log(fetched, cfg)
+            else:
+                emit_stdout(ok, cfg)
+                emit_status_log(fetched, cfg)
 
     try:
         if cfg.throttle_per_second:
@@ -173,27 +174,29 @@ def main(argv: list[str] | None = None) -> int:
             # unpartitioned row_number Window.
             from ganda_spark.operators.ranking import with_global_rank
 
-            reqs, rank_cache = with_global_rank(reqs, ["seq"], parts, rank_col="_rn")
-            reqs = reqs.withColumn(
-                "_wave",
-                F.floor((F.col("_rn") - 1) / cfg.throttle_per_second).cast("int"),
-            ).drop("_rn")
-            # Driver-side wave ids: n/throttle rows collected, one job per
-            # wave. Bounded and fine for THIS surface — the CLI emits waves
-            # sequentially in real time (one second apart) by definition, so
-            # the driver loop IS the semantics. The scale path for 10^10-row
-            # frontiers is CrawlDriver's per-generation release cap
-            # (streaming/frontier_loop.py), which never enumerates waves.
-            waves = [
-                r[0] for r in reqs.select("_wave").distinct().orderBy("_wave").collect()
-            ]
-            for w in waves:
-                t0 = time.time()
-                fetch_and_emit(reqs.where(F.col("_wave") == w).drop("_wave"))
-                elapsed = time.time() - t0
-                if w != waves[-1] and elapsed < 1.0:
-                    time.sleep(1.0 - elapsed)
-            rank_cache.unpersist()
+            with cache.scope():  # one set of rank boundaries for every wave
+                reqs = with_global_rank(reqs, ["seq"], parts, rank_col="_rn")
+                reqs = reqs.withColumn(
+                    "_wave",
+                    F.floor((F.col("_rn") - 1) / cfg.throttle_per_second).cast("int"),
+                ).drop("_rn")
+                # Driver-side wave ids: n/throttle rows collected, one job
+                # per wave. Bounded and fine for THIS surface — the CLI
+                # emits waves sequentially in real time (one second apart)
+                # by definition, so the driver loop IS the semantics. The
+                # scale path for 10^10-row frontiers is CrawlDriver's
+                # per-generation release cap (streaming/frontier_loop.py),
+                # which never enumerates waves.
+                waves = [
+                    r[0]
+                    for r in reqs.select("_wave").distinct().orderBy("_wave").collect()
+                ]
+                for w in waves:
+                    t0 = time.time()
+                    fetch_and_emit(reqs.where(F.col("_wave") == w).drop("_wave"))
+                    elapsed = time.time() - t0
+                    if w != waves[-1] and elapsed < 1.0:
+                        time.sleep(1.0 - elapsed)
         else:
             fetch_and_emit(reqs)
     except Exception as exc:  # fail-fast parity: parse errors stop the

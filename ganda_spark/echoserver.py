@@ -49,6 +49,8 @@ def _request_echo(handler: "EchoHandler", body: bytes) -> dict:
 class EchoHandler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
     server_version = "ganda-spark-echo"
+    # headers and body are separate writes: Nagle would hold each on ACK
+    disable_nagle_algorithm = True
     delay_millis = 0
     flaky_counts: dict[str, int] = defaultdict(int)
     hits: dict[str, int] = defaultdict(int)

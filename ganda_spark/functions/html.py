@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
+
 # (kind, pattern/search, replacement) executed IN ORDER.
 #   kind "re"  — regex replace (Java regex on Spark, RE2 via 'g' on DuckDB;
 #                patterns restricted to the common dialect)
@@ -123,7 +125,6 @@ def remove_boilerplate(
     max_lines_per_host: int = 1024,
     cache_input: bool = True,
     max_broadcast_hosts: int = 2_000_000,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """Per-host repeated-line boilerplate filter.
 
@@ -143,9 +144,7 @@ def remove_boilerplate(
     cache_input (r7, guide §5): the input feeds THREE branches (line
     explode, per-host doc counts, the final join) — composed over an
     expensive upstream (fetch→extract chains) the recompute tripled the
-    wall (OPTIMIZATION_r07.md has the measured before/after). Persisted
-    handles ride `cache_out` when given, else live for the session (the
-    one-shot-query contract used across this repo).
+    wall (OPTIMIZATION_r07.md has the measured before/after).
 
     max_broadcast_hosts (r7, VERDICT r6 wrong #2): the per-host tables
     (`ndocs`, and `bp` at up to hosts × `max_lines_per_host` hashes) were
@@ -156,9 +155,7 @@ def remove_boilerplate(
     joins on the host key, which the plan already contains.
     """
     if cache_input:
-        df = df.persist()
-        if cache_out is not None:
-            cache_out.append(df)
+        df = cache.persist(df)
     parts = F.split(F.col(text_col), "\n")
     line_rows = df.select(
         F.col(host_col).alias("_h"),
@@ -174,9 +171,7 @@ def remove_boilerplate(
     )
     small_hosts = True
     if max_broadcast_hosts is not None:
-        ndocs = ndocs.persist()
-        if cache_out is not None:
-            cache_out.append(ndocs)
+        ndocs = cache.persist(ndocs)
         small_hosts = (
             ndocs.limit(max_broadcast_hosts + 1).count() <= max_broadcast_hosts
         )

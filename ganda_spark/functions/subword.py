@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
+
 # deterministic demo vocabulary: frequent English words, affixes and
 # letter pairs + single letters/digits (the byte-fallback floor). Any
 # real tokenizer vocab (BPE merges flattened to pieces) drops in here.
@@ -129,7 +131,7 @@ def token_counts_subword(
     # evaluations could assign DIFFERENT ids and silently misjoin. The
     # cache pins one id assignment for both branches (and saves the
     # second upstream scan).
-    rowed = df.withColumn("_swrow", F.monotonically_increasing_id()).persist()
+    rowed = cache.persist(df.withColumn("_swrow", F.monotonically_increasing_id()))
     words = rowed.select(
         "_swrow",
         F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("_swword"),

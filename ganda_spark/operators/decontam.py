@@ -27,6 +27,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
+
 
 def ngram_col(text_col: str, n: int) -> F.Column:
     """DISTINCT word n-grams of `text_col` as array<string> — pure Column
@@ -54,7 +56,6 @@ def decontaminate(
     n: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_out: list | None = None,
 ) -> DataFrame:
     """Annotate `docs` with benchmark-overlap evidence:
 
@@ -72,18 +73,15 @@ def decontaminate(
     count per id — identical to size(grams) since the grams array is
     already distinct) and the hit join read the cache. Docs shorter than
     n words have no gram rows and coalesce to 0 exactly as before.
-    Persisted handles ride `cache_out` when given (loop callers
-    unpersist); the cache is gram-table-sized — callers at extreme scale
-    can prefer decontaminate_bloom, which already streams."""
+    The cache is gram-table-sized — callers at extreme scale can prefer
+    decontaminate_bloom, which already streams."""
     grams = ngram_col(text_col, n)
     bench_grams = (
         bench.select(F.explode(ngram_col(text_col, n)).alias("ngram")).distinct()
     )
-    doc_grams = docs.select(
-        F.col(id_col), F.explode(grams).alias("ngram")
-    ).persist()
-    if cache_out is not None:
-        cache_out.append(doc_grams)
+    doc_grams = cache.persist(
+        docs.select(F.col(id_col), F.explode(grams).alias("ngram"))
+    )
     doc_counts = doc_grams.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("_n_doc_ngrams")
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
+
 MD5_HEX_CHARS = 12  # 48-bit hash values — sums of thousands still fit BIGINT
 
 
@@ -753,92 +755,91 @@ def connected_components(
     # r7 (guide §2.3): ONE scan of the pair pipeline — the 4-way union
     # re-executed the whole upstream (LSH band join + verify) once per
     # branch; explode emits the same 4 rows per pair from a single pass.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(id_a).alias("u"), F.col(id_b).alias("v")),
-                    F.struct(F.col(id_b).alias("u"), F.col(id_a).alias("v")),
-                    F.struct(F.col(id_a).alias("u"), F.col(id_a).alias("v")),
-                    F.struct(F.col(id_b).alias("u"), F.col(id_b).alias("v")),
-                )
-            ).alias("_e")
+    with cache.scope():
+        edges = cache.persist(
+            pairs.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col(id_a).alias("u"), F.col(id_b).alias("v")),
+                        F.struct(F.col(id_b).alias("u"), F.col(id_a).alias("v")),
+                        F.struct(F.col(id_a).alias("u"), F.col(id_a).alias("v")),
+                        F.struct(F.col(id_b).alias("u"), F.col(id_b).alias("v")),
+                    )
+                ).alias("_e")
+            )
+            .select(F.col("_e.u").alias("u"), F.col("_e.v").alias("v"))
         )
-        .select(F.col("_e.u").alias("u"), F.col("_e.v").alias("v"))
-        .persist()
-    )
-    edges.count()  # materializes the edge cache (one job, ONE scan of pairs)
-    # initial labels: each vertex labels itself — the self-loop rows are
-    # exactly the vertex set (computed from the cache, used in iteration 1)
-    labels = (
-        edges.where(F.col("u") == F.col("v"))
-        .select(F.col("u").alias("vid"), F.col("u").alias("label"))
-        .distinct()
-    )
-    actions = 1
-    iterations = 0
-    prev_path: str | None = None
-    final_path: str | None = None
-    try:
-        for _ in range(max_iters):
-            iterations += 1
-            # ONE reference to the previous labels: join edges(+self-loops),
-            # then min(label) = new label and the self-loop row = old label
-            tentative = (
-                edges.join(labels, F.col("v") == F.col("vid"))
-                .groupBy("u")
-                .agg(
-                    F.min("label").alias("label"),
-                    F.min(F.when(F.col("v") == F.col("u"), F.col("label"))).alias(
-                        "_old"
-                    ),
+        edges.count()  # materializes the edge cache (one job, ONE scan of pairs)
+        # initial labels: each vertex labels itself — the self-loop rows are
+        # exactly the vertex set (computed from the cache, used in iteration 1)
+        labels = (
+            edges.where(F.col("u") == F.col("v"))
+            .select(F.col("u").alias("vid"), F.col("u").alias("label"))
+            .distinct()
+        )
+        actions = 1
+        iterations = 0
+        prev_path: str | None = None
+        final_path: str | None = None
+        try:
+            for _ in range(max_iters):
+                iterations += 1
+                # ONE reference to the previous labels: join edges(+self-loops),
+                # then min(label) = new label and the self-loop row = old label
+                tentative = (
+                    edges.join(labels, F.col("v") == F.col("vid"))
+                    .groupBy("u")
+                    .agg(
+                        F.min("label").alias("label"),
+                        F.min(F.when(F.col("v") == F.col("u"), F.col("label"))).alias(
+                            "_old"
+                        ),
+                    )
                 )
-            )
-            if shortcut:
-                # pointer jump: label ← min(label, label[label]); frontier
-                # doubles per round. The self-join doubles the PLAN too,
-                # but both sides root at the (constant-size) spool read.
-                jump = tentative.select(
-                    F.col("u").alias("_jvid"), F.col("label").alias("_jlabel")
+                if shortcut:
+                    # pointer jump: label ← min(label, label[label]); frontier
+                    # doubles per round. The self-join doubles the PLAN too,
+                    # but both sides root at the (constant-size) spool read.
+                    jump = tentative.select(
+                        F.col("u").alias("_jvid"), F.col("label").alias("_jlabel")
+                    )
+                    tentative = tentative.join(
+                        jump, tentative["label"] == jump["_jvid"], "left"
+                    ).select(
+                        "u",
+                        "_old",
+                        F.least(
+                            F.col("label"), F.coalesce(F.col("_jlabel"), F.col("label"))
+                        ).alias("label"),
+                    )
+                new_labels = tentative.select(
+                    F.col("u").alias("vid"),
+                    "label",
+                    (F.col("label") < F.col("_old")).cast("long").alias("_chg"),
                 )
-                tentative = tentative.join(
-                    jump, tentative["label"] == jump["_jvid"], "left"
-                ).select(
-                    "u",
-                    "_old",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("_jlabel"), F.col("label"))
-                    ).alias("label"),
+                obs = Observation()
+                path = f"{spool}/labels_{iterations}"
+                # ONE action: the spool write; the changed count rides as an
+                # observation on the same query
+                new_labels.observe(obs, F.sum("_chg").alias("chg")).write.mode(
+                    "overwrite"
+                ).parquet(path)
+                changed = obs.get["chg"] or 0
+                actions += 1
+                if prev_path is not None:
+                    shutil.rmtree(prev_path, ignore_errors=True)
+                prev_path = path
+                labels = spark.read.parquet(path).drop("_chg")
+                if changed == 0:
+                    final_path = path
+                    break
+            else:
+                raise RuntimeError(
+                    f"connected_components: no fixpoint in {max_iters} iters"
                 )
-            new_labels = tentative.select(
-                F.col("u").alias("vid"),
-                "label",
-                (F.col("label") < F.col("_old")).cast("long").alias("_chg"),
-            )
-            obs = Observation()
-            path = f"{spool}/labels_{iterations}"
-            # ONE action: the spool write; the changed count rides as an
-            # observation on the same query
-            new_labels.observe(obs, F.sum("_chg").alias("chg")).write.mode(
-                "overwrite"
-            ).parquet(path)
-            changed = obs.get["chg"] or 0
-            actions += 1
-            if prev_path is not None:
+        finally:
+            if final_path is None and prev_path is not None:
                 shutil.rmtree(prev_path, ignore_errors=True)
-            prev_path = path
-            labels = spark.read.parquet(path).drop("_chg")
-            if changed == 0:
-                final_path = path
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components: no fixpoint in {max_iters} iters"
-            )
-    finally:
-        edges.unpersist()
-        if final_path is None and prev_path is not None:
-            shutil.rmtree(prev_path, ignore_errors=True)
     if stats_out is not None:
         stats_out["iterations"] = iterations
         stats_out["actions"] = actions

@@ -35,6 +35,8 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ganda_spark import cache
+
 PPM = 1_000_000
 
 
@@ -44,7 +46,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping_bp: int = 8500,
-    cache_out: list | None = None,
     dangling: bool = False,
     spool_every: int = 8,
     spool_dir: str | None = None,
@@ -79,11 +80,6 @@ def pagerank(
     (the spool is lineage truncation, not a semantic change). The crawl
     standard 3-5 iterations never spools; iterations=20 now completes in
     bounded time instead of hitting the CC failure mode.
-
-    cache_out: the pop_batch cache-hygiene pattern — the persisted
-    edge⋈outdeg and node tables are appended so the caller can unpersist
-    after its action; with None the cache is released with the session
-    (fine for one-shot queries, wrong inside a long-running loop).
     """
     if not 0 < damping_bp < 10_000:
         raise ValueError(f"damping_bp must be in (0, 10000), got {damping_bp}")
@@ -93,15 +89,14 @@ def pagerank(
         raise ValueError(f"spool_every must be >= 1, got {spool_every}")
 
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    nodes = (
+    nodes = cache.persist(
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct()
-        .persist()
     )
     out = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_outdeg"))
     # one persisted (src, dst, outdeg) table; iterations only join it
-    ed = e.join(out, "_src").persist()
+    ed = cache.persist(e.join(out, "_src"))
     base = (10_000 - damping_bp) * PPM // 10_000
     if dangling:
         # sinks = nodes that never appear as src; N is a one-time bounded
@@ -110,9 +105,11 @@ def pagerank(
         # persisted: the left_semi against it runs every iteration, and
         # without the persist each iteration re-runs the src-distinct
         # aggregate it is built from
-        dang_nodes = nodes.join(
-            e.select(F.col("_src").alias("node")).distinct(), "node", "left_anti"
-        ).persist()
+        dang_nodes = cache.persist(
+            nodes.join(
+                e.select(F.col("_src").alias("node")).distinct(), "node", "left_anti"
+            )
+        )
         n_nodes = nodes.count()
 
     spark = edges.sparkSession
@@ -125,11 +122,8 @@ def pagerank(
             # contribs join) — unpersisted, that doubled the evaluated
             # subtree per iteration (2^iters full re-runs; measured 21.7 s
             # → the fix landed q_crawl_pagerank_normalized at seconds).
-            # Node-table-sized persist; handles ride cache_out like
-            # ed/nodes, released with the session for one-shot callers.
-            ranks = ranks.persist()
-            if cache_out is not None:
-                cache_out.append(ranks)
+            # Node-table-sized persist, scoped like ed/nodes.
+            ranks = cache.persist(ranks)
             # D = Σ r_{i-1} over sinks — a 1-row aggregate of the previous
             # iteration's ranks, broadcast back into the update
             d = F.broadcast(
@@ -184,9 +178,4 @@ def pagerank(
             path = f"{spool}/ranks_{i}"
             ranks.write.mode("overwrite").parquet(path)
             ranks = spark.read.parquet(path)
-    if cache_out is not None:
-        cache_out.append(ed)
-        cache_out.append(nodes)
-        if dangling:
-            cache_out.append(dang_nodes)
     return ranks

@@ -47,7 +47,6 @@ def pop_batch(
     cfg: EngineConfig,
     global_budget: int | None = None,
     host_budgets: DataFrame | None = None,
-    cache_out: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(released, deferred) for one crawl generation.
 
@@ -60,13 +59,9 @@ def pop_batch(
     robots crawl-delay (operators/robots.crawl_delay_budgets); broadcast
     join, default = cfg.per_host_budget.
 
-    cache_out: when global_budget is set, the scale-safe rank persists an
-    intermediate that must stay cached until released/deferred are
-    materialized. If cache_out is given, the handle is appended to it and
-    the CALLER unpersists after its generation commits (frontier_loop does
-    this). If None, the handle stays cached for the session — acceptable
-    only for one-shot callers (oracle queries); loop callers MUST pass a
-    registry or they leak one cache per generation (VERDICT r2 #1).
+    global_budget: the scale-safe rank persists its range boundaries in
+    the caller's cache scope (ganda_spark.cache); materialize released
+    and deferred before that scope closes.
     """
     w = Window.partitionBy("host").orderBy(
         F.col("priority").asc(), F.col("seq").asc()
@@ -99,11 +94,9 @@ def pop_batch(
             max(cfg.request_workers, frontier.rdd.getNumPartitions()),
             max(default_par * 16, 64),
         )
-        capped, rank_cache = with_global_rank(
+        capped = with_global_rank(
             released, ["priority", "seq"], parts, rank_col="_gk"
         )
-        if cache_out is not None:
-            cache_out.append(rank_cache)
         over = capped.where(F.col("_gk") > global_budget).drop("_gk")
         released = capped.where(F.col("_gk") <= global_budget).drop("_gk")
         deferred = deferred.unionByName(over)

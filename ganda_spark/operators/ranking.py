@@ -16,20 +16,20 @@ the data. Equivalent by construction to row_number() OVER (ORDER BY k):
 range partitions are ordered, so global_rank = offset(partition) + local
 rank.
 
-The ranked intermediate is persist()ed: the offsets branch and the output
-branch must see the SAME range-partition boundaries (RangePartitioner's
-sample seed is derived from the RDD id, so two independent evaluations can
-disagree). The persisted handle is RETURNED alongside the output; the
-caller must `handle.unpersist()` after the output has been materialized
-(loop callers: once per generation — see politeness.pop_batch /
-streaming.frontier_loop). Unpersisting BEFORE materialization would
-re-expose the boundary nondeterminism the persist exists to pin.
+The ranked intermediate is persisted (ganda_spark.cache): the offsets
+branch and the output branch must see the SAME range-partition boundaries
+(RangePartitioner's sample seed is derived from the RDD id, so two
+independent evaluations can disagree). Materialize the output before the
+caller's cache scope closes; reading it after the release would re-expose
+the boundary nondeterminism the persist exists to pin.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ganda_spark import cache
 
 _PID = "_gr_pid"
 _LRK = "_gr_rk"
@@ -41,25 +41,19 @@ def with_global_rank(
     order_cols: list[str | Column],
     partitions: int,
     rank_col: str = "global_rank",
-) -> tuple[DataFrame, DataFrame]:
-    """(ranked_df, cache_handle): ranked_df carries rank_col =
-    row_number() OVER (ORDER BY *order_cols), computed without a
-    single-partition shuffle of the data. order_cols should be a total
-    order (include a tiebreaker like seq) for a deterministic result.
-
-    cache_handle is the persisted intermediate; the caller OWNS it and must
-    call cache_handle.unpersist() after materializing ranked_df (VERDICT r2
-    "what's wrong" #1: a loop that never unpersists accumulates one cached
-    DataFrame per iteration).
-    """
-    ranged = (
+) -> DataFrame:
+    """df plus rank_col = row_number() OVER (ORDER BY *order_cols),
+    computed without a single-partition shuffle of the data. order_cols
+    should be a total order (include a tiebreaker like seq) for a
+    deterministic result. Materialize it inside the caller's cache scope
+    (module docstring)."""
+    ranged = cache.persist(
         df.repartitionByRange(max(partitions, 1), *order_cols)
         .withColumn(_PID, F.spark_partition_id())
         .withColumn(
             _LRK,
             F.row_number().over(Window.partitionBy(_PID).orderBy(*order_cols)),
         )
-        .persist()
     )
     counts = ranged.groupBy(_PID).agg(F.count(F.lit(1)).alias("_n"))
     # cumulative offsets over the P aggregate rows (tiny unpartitioned
@@ -68,12 +62,11 @@ def with_global_rank(
     offsets = counts.select(
         _PID, F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias(_OFF)
     )
-    out = (
+    return (
         ranged.join(F.broadcast(offsets), _PID)
         .withColumn(rank_col, (F.col(_OFF) + F.col(_LRK)).cast("long"))
         .drop(_PID, _LRK, _OFF)
     )
-    return out, ranged
 
 
 def assert_no_global_window(df: DataFrame) -> None:

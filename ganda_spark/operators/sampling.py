@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
 from ganda_spark.operators.dedup import md5_int
 
 
@@ -226,7 +227,6 @@ def export_ordered_shards(
     key_col: str = "doc_id",
     buckets: int = 256,
     shard_col: str = "shard_id",
-    cache_input: bool = True,
 ) -> DataFrame:
     """Size-budgeted ORDERED shard assignment: rows taken in ascending
     `key_col` order, shard s holds the rows whose preceding cumulative
@@ -254,18 +254,14 @@ def export_ordered_shards(
     totals, the final assignment pass) — with an expensive upstream
     (normalize→gate→dedup compositions) that recompute tripled the wall
     (measured 3.9k docs/s → 18k+ with the persist at the 120k rehearsal),
-    and at 100 TB it is three full passes. `cache_input` (default on)
-    persists the input for the duration; the returned DataFrame still
-    reads the persisted frame — callers materializing once may
-    `df.unpersist()` afterwards. Pass False when the caller already
-    persisted or spooled.
+    and at 100 TB it is three full passes — so the input is persisted,
+    and the returned DataFrame reads the persisted frame.
     """
     if shard_bytes < 1:
         raise ValueError(f"shard_bytes must be >= 1, got {shard_bytes}")
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")
-    if cache_input:
-        df = df.persist()
+    df = cache.persist(df)
     bounds = df.agg(
         F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
     ).collect()[0]

@@ -19,6 +19,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
+
 
 def as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -98,20 +100,18 @@ def _topk_candidates_arrow(
     EXACTNESS: integer scores (integer_codes=True) are order-free;
     double cosines accumulate dimension-sequentially with the one-
     product-one-divide of cosine_pre (the _pair_dup_arrays contract).
-    Cross-length pairs, NULL vectors and NULL elements score NULL
-    (zip_with semantics — the element-null flag is computed in Catalyst)
+    Cross-length pairs, NULL vectors and NULL elements of the scored
+    array score NULL (zip_with semantics — the flag is computed in Catalyst)
     and are pruned under NULL-below-everything, NaN-above-everything,
     ties to the lowest neighbor id — Spark's (score DESC, nid ASC)."""
     import pandas as pd
 
     score_t = "bigint" if integer_codes else "double"
+    # flag NULLs in the SCORED array: quantization zero-codes NULL elements
     c = emb.select(
         F.col(id_col).alias("nid"),
         (code_expr if code_expr is not None else F.col(vec_col)).alias("_cv"),
-        F.expr(
-            f"exists({vec_col}, x -> x is null)"
-        ).alias("_hn"),
-    )
+    ).withColumn("_hn", F.exists("_cv", lambda x: x.isNull()))
     id_t = dict(c.dtypes)["nid"]
 
     qs = []  # (qid, vector or None)
@@ -257,7 +257,11 @@ def brute_force_topk(
     unchanged Catalyst expressions. The Catalyst join form remains behind
     use_arrow=False and as the too-many-queries fallback. (Zero-norm
     vectors take the NaN route in the Arrow stage where ANSI raised —
-    the pair scan's documented upgrade.)"""
+    the pair scan's documented upgrade.)
+
+    Id ordering: the Arrow stage breaks ties in PYTHON's id order, which
+    matches Spark's UTF8-byte order only for numeric and ASCII ids (as in
+    lsh_verified_pairs); map non-ASCII string ids to a surrogate first."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
@@ -647,8 +651,8 @@ def kmeans_centroids(
         # iteration. Every iteration is collect-localized (C rows, the
         # established exact round-trip), so the cache can be released
         # before returning and no consumer re-enters the Lloyd's chain.
-        rows = _kmeans_rows(emb, vec_col).persist()
-        try:
+        with cache.scope():
+            rows = cache.persist(_kmeans_rows(emb, vec_col))
             for _ in range(iters):
                 cent = _kmeans_update_arrow(
                     emb, cent, dim, id_col, vec_col, rows=rows
@@ -656,8 +660,6 @@ def kmeans_centroids(
                 cent = emb.sparkSession.createDataFrame(
                     cent.collect(), f"{id_col} long, {vec_col} array<double>"
                 )
-        finally:
-            rows.unpersist()
         return cent
     for it in range(iters):
         if use_arrow:
@@ -1163,7 +1165,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): embedding-space
     near-duplicate pruning that scales by CLUSTERING FIRST — k-means the
@@ -1199,11 +1200,8 @@ def semantic_dedup(
     )
     # persist: assigned feeds the pair scan AND the verdict join — without
     # it each branch re-runs the upstream embedding projection + corpus
-    # scan (guide §5). One-shot callers leak a bounded corpus-row cache
-    # for the session; loop callers pass cache_out and unpersist.
-    assigned = ivf_assign(emb, cent, id_col, vec_col, nprobe=1).persist()
-    if cache_out is not None:
-        cache_out.append(assigned)
+    # scan (guide §5). Held by the caller's cache scope.
+    assigned = cache.persist(ivf_assign(emb, cent, id_col, vec_col, nprobe=1))
     # r7: the within-list pair scan runs as ONE grouped NumPy pass with
     # bit-exact Spark arithmetic (list_pair_dups) — the Catalyst
     # self-join paid ~100 µs of interpreted fold per pair and shuffled
@@ -1288,7 +1286,9 @@ def quantized_topk(
     by id (survivor-broadcast joins) and the exact-cosine re-rank and
     round are the UNCHANGED Catalyst expressions. The Catalyst candidate
     join remains behind use_arrow=False (equivalence test-pinned) and as
-    the too-many-queries fallback."""
+    the too-many-queries fallback.
+
+    Id ordering: numeric or ASCII ids only, as in brute_force_topk."""
     from pyspark.sql import Window
 
     qz = quantize_unit_col(F.col(vec_col))
@@ -1466,6 +1466,9 @@ def semantic_dedup_capped(
     dropping an oversized list outright would forfeit ALL dedup for its
     members — hence the fallback instead of a drop.
 
+    cache_out: kept only for the frozen bench.py, which unpersists what
+    it receives; other callers release the persist with a cache scope.
+
     Adds: list_id, dup_of, is_semdup, list_capped."""
     cent = (
         centroids
@@ -1474,9 +1477,8 @@ def semantic_dedup_capped(
     )
     # assigned feeds 5 branches (histogram, the small pair scan, the
     # big-list group scan, the verdict join); r7: persist UNCONDITIONALLY
-    # (guide §5) — one-shot callers leak a bounded corpus-row cache for
-    # the session; loop callers pass cache_out and unpersist as before.
-    assigned = ivf_assign(emb, cent, id_col, vec_col, nprobe=1).persist()
+    # (guide §5), held by the caller's cache scope.
+    assigned = cache.persist(ivf_assign(emb, cent, id_col, vec_col, nprobe=1))
     if cache_out is not None:
         cache_out.append(assigned)
     sizes = (
@@ -1558,7 +1560,7 @@ def semantic_dedup_incremental(
     )
     # persist: new_assigned feeds the pair stages and the verdict join —
     # batch-sized, cheap insurance against re-running the batch embedding
-    new_assigned = ivf_assign(emb_new, cent, id_col, vec_col, nprobe=1).persist()
+    new_assigned = cache.persist(ivf_assign(emb_new, cent, id_col, vec_col, nprobe=1))
     if not broadcast_new:
         new_b = new_assigned.select(
             "list_id",
@@ -1727,7 +1729,6 @@ def recall_report(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_out: list | None = None,
 ) -> DataFrame:
     """First-class ANN quality evaluator (VERDICT r4 #4): recall@k of each
     approximate method vs brute-force ground truth on the SAME corpus and
@@ -1740,11 +1741,10 @@ def recall_report(
     each method's hit count is a left-semi join on (qid, nid) — truth-row
     sized, never corpus-sized. The truth subplan feeds 4 branches, so it
     is persisted (sampled-query sized, Q·k rows — bounded by the caller's
-    query sample, not the corpus); cache_out receives it for unpersist."""
-    truth = brute_force_topk(emb, query_ids, k, id_col, vec_col).select("qid", "nid")
-    truth = truth.persist()
-    if cache_out is not None:
-        cache_out.append(truth)
+    query sample, not the corpus), held by the caller's cache scope."""
+    truth = cache.persist(
+        brute_force_topk(emb, query_ids, k, id_col, vec_col).select("qid", "nid")
+    )
     tot = truth.agg(F.count(F.lit(1)).alias("_tot"))
     methods = [
         ("lsh", ann_topk(emb, query_ids, k, n_planes, dim, id_col, vec_col)),

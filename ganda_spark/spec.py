@@ -126,14 +126,6 @@ ECHO_P3 = (
 )
 
 
-def echo_body_py(url: str, host: str, method: str = "GET") -> str:
-    """Pure-Python echo body (used inside the fetch UDF and tests).
-    The uri is everything after the authority (path + query), matching
-    Go's Request.RequestURI echoed by the reference echoserver."""
-    path = url.split(host, 1)[1] if host in url else "/"
-    return ECHO_P1 + host + ECHO_P2_FMT.format(method=method) + path + ECHO_P3
-
-
 def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 

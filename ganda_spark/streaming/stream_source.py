@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ganda_spark import cache
 from ganda_spark.config import EngineConfig
 from ganda_spark.functions.urls import url_host
 from ganda_spark.operators.fetch import mock_fetch_udf, split_results
@@ -71,8 +72,8 @@ def start_streaming_crawl(
         # persist: the results and errors writes must split ONE fetch
         # execution (a real fetcher would otherwise issue every request
         # twice — same bug class as the frontier loop, VERDICT r1 #4)
-        fetched = fetcher(placed, cfg).persist()
-        try:
+        with cache.scope():
+            fetched = cache.persist(fetcher(placed, cfg))
             results, errors = split_results(fetched)
             (
                 results.withColumn("_batch_id", F.lit(batch_id))
@@ -84,8 +85,6 @@ def start_streaming_crawl(
                 .write.mode("append")
                 .parquet(os.path.join(output_dir, "errors"))
             )
-        finally:
-            fetched.unpersist()
 
     return (
         lines.writeStream.foreachBatch(process_batch)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from ganda_spark import cache
 from ganda_spark.operators.dedup import (
     exact_dup_groups,
     jaccard_verify,
@@ -495,14 +496,12 @@ def test_semantic_capped_guards_degenerate_and_keeps_planted(spark, sf_dir):
     )
     nudged = _nudged(emb.where(F.col("vec_id") % 10 == 0))
     corpus = emb.unionByName(nudged).unionByName(blob)
-    cache = []
-    out = semantic_dedup_capped(
-        corpus, n_centroids=16, iters=1, threshold_bp=9990, max_list=150,
-        dim=64, cache_out=cache,
-    )
-    rows = {r.vec_id: r for r in out.collect()}
-    for c in cache:
-        c.unpersist()
+    with cache.scope():
+        out = semantic_dedup_capped(
+            corpus, n_centroids=16, iters=1, threshold_bp=9990, max_list=150,
+            dim=64,
+        )
+        rows = {r.vec_id: r for r in out.collect()}
     blob_rows = [rows[i] for i in range(200_001, 200_301)]
     assert all(r.list_capped for r in blob_rows)
     assert all(r.is_semdup and r.dup_of == 3 for r in blob_rows)
@@ -568,11 +567,9 @@ def test_recall_report_bounds_and_determinism(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     q = emb.where(F.col("vec_id") < 8)
-    cache = []
-    rows = recall_report(emb, q, k=5, dim=64, cache_out=cache).collect()
+    with cache.scope():
+        rows = recall_report(emb, q, k=5, dim=64).collect()
     again = recall_report(emb, q, k=5, dim=64).collect()
-    for c in cache:
-        c.unpersist()
     assert {r.method for r in rows} == {"lsh", "ivf", "quantized"}
     assert all(r.k == 5 and 0 <= r.recall_bp <= 10_000 for r in rows)
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))

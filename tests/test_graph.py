@@ -4,6 +4,7 @@ engine-reproducibility, cache hygiene."""
 import pyspark.sql.functions as F
 import pytest
 
+from ganda_spark import cache
 from ganda_spark.operators.graph import pagerank
 
 
@@ -59,15 +60,13 @@ def test_dangling_and_source_nodes(spark):
     assert r["c"] > r["a"]
 
 
-def test_cache_out_and_jvm_only_plan(spark):
+def test_cache_scope_and_jvm_only_plan(spark):
     e = _edges(spark, [("a", "b"), ("b", "a")])
-    caches = []
-    df = pagerank(e, iterations=2, cache_out=caches)
-    df.collect()
-    # edge⋈outdeg + node table are both persisted and handed back
-    assert len(caches) == 2 and all(c.is_cached for c in caches)
-    for c in caches:
-        c.unpersist()
+    with cache.scope() as caches:
+        df = pagerank(e, iterations=2)
+        df.collect()
+        # edge⋈outdeg + node table are both persisted in the scope
+        assert len(caches) == 2 and all(c.is_cached for c in caches)
     assert not any(c.is_cached for c in caches)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

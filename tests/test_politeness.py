@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from ganda_spark import cache
 from ganda_spark.config import EngineConfig
 from ganda_spark.operators.politeness import partition_for_fetch, pop_batch, robots_gate
 from ganda_spark.sources.frontier import seed_frontier
@@ -61,13 +62,12 @@ def test_global_rank_matches_reference_and_is_scale_safe(spark, sf_dir):
     )
 
     frontier = seed_frontier(spark, sf_dir)
-    ranked, handle = with_global_rank(frontier, ["priority", "seq"], 8, rank_col="rk")
-    assert_no_global_window(ranked)
-
-    pdf = ranked.select("seq", "priority", "rk").toPandas()
+    with cache.scope():
+        ranked = with_global_rank(frontier, ["priority", "seq"], 8, rank_col="rk")
+        assert_no_global_window(ranked)
+        pdf = ranked.select("seq", "priority", "rk").toPandas()
     ref = pdf.sort_values(["priority", "seq"]).reset_index(drop=True)
     assert (ref["rk"].to_numpy() == range(1, len(ref) + 1)).all()
-    handle.unpersist()
 
 
 def test_global_window_guard_trips_on_bad_pattern(spark):

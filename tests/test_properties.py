@@ -125,13 +125,14 @@ def test_global_rank_equals_single_task_reference(rows, parts):
     """with_global_rank == row_number() OVER (ORDER BY priority, seq) for
     arbitrary data and partition counts (the scale-safe rank must be
     indistinguishable from the single-task form it replaces)."""
+    from ganda_spark import cache
     from ganda_spark.operators.ranking import with_global_rank
 
     spark = _get_spark()
     df = spark.createDataFrame(list(rows), "priority int, seq long")
-    ranked, handle = with_global_rank(df.repartition(3), ["priority", "seq"], parts, "rk")
-    got = {r["seq"]: r["rk"] for r in ranked.collect()}
-    handle.unpersist()
+    with cache.scope():
+        ranked = with_global_rank(df.repartition(3), ["priority", "seq"], parts, "rk")
+        got = {r["seq"]: r["rk"] for r in ranked.collect()}
     expect = {
         s: i + 1
         for i, (_, s) in enumerate(sorted(rows, key=lambda t: (t[0], t[1])))

@@ -386,6 +386,24 @@ def test_quantized_topk_arrow_equals_catalyst(spark):
     c = quantized_topk(emb, q, k=5, refine=3, use_arrow=False).collect()
     assert sorted(map(key, a)) == sorted(map(key, c))
     emb.unpersist()
+    # small corpus whose k·refine cutoff reaches integer score 0: the
+    # NULL-element vector quantizes to zero codes and scores 0 (tied with
+    # the orthogonal id 2), so it must outrank the negative id 4
+    small = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0, 0.0]),
+            (1, [1.0, 1.0, 0.0, 0.0]),
+            (2, [0.0, 1.0, 0.0, 0.0]),
+            (3, [None, 1.0, 0.0, 0.0]),
+            (4, [-1.0, 0.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    q0 = small.where(F.col("vec_id") == 0)
+    a = quantized_topk(small, q0, k=3, refine=1, dim=4, use_arrow=True).collect()
+    c = quantized_topk(small, q0, k=3, refine=1, dim=4, use_arrow=False).collect()
+    assert [r.nid for r in sorted(c, key=lambda r: r.rank)] == [1, 2, 3]
+    assert sorted(map(key, a)) == sorted(map(key, c))
 
 
 # --- fused per-bucket LSH verify ≡ pairs→verify two-step -------------------

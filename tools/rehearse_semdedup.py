@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+from ganda_spark import cache  # noqa: E402
 from ganda_spark.session import get_spark  # noqa: E402
 from ganda_spark.operators.similarity import (  # noqa: E402
     localized_kmeans_centroids,
@@ -92,25 +93,22 @@ def main() -> int:
     out = {"n": n, "blob": blob_n, "centroids": n_cent}
 
     t0 = time.time()
-    cache: list = []
-    res = semantic_dedup_capped(
-        corpus, n_centroids=n_cent, iters=2, threshold_bp=9990,
-        max_list=4 * (n // n_cent), dim=64, cache_out=cache,
-    ).persist()
-    agg = res.agg(
-        F.sum(F.col("is_semdup").cast("long")).alias("dups"),
-        F.sum(F.col("list_capped").cast("long")).alias("capped_rows"),
-        F.sum(
-            ((F.col("vec_id") >= 1_000_000) & F.col("is_semdup")).cast("long")
-        ).alias("blob_dups"),
-    ).collect()[0]
+    with cache.scope():
+        res = semantic_dedup_capped(
+            corpus, n_centroids=n_cent, iters=2, threshold_bp=9990,
+            max_list=4 * (n // n_cent), dim=64,
+        )
+        agg = res.agg(
+            F.sum(F.col("is_semdup").cast("long")).alias("dups"),
+            F.sum(F.col("list_capped").cast("long")).alias("capped_rows"),
+            F.sum(
+                ((F.col("vec_id") >= 1_000_000) & F.col("is_semdup")).cast("long")
+            ).alias("blob_dups"),
+        ).collect()[0]
     out["capped_wall_sec"] = round(time.time() - t0, 1)
     out["dups"] = agg["dups"]
     out["capped_rows"] = agg["capped_rows"]
     out["blob_recall_bp"] = 10_000 * agg["blob_dups"] // blob_n
-    res.unpersist()
-    for c in cache:
-        c.unpersist()
 
     # incremental: centroid build amortized (kept from the full build in
     # production) — time assignment+compare alone, then with the build
