@@ -31,6 +31,7 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="ganda-spark",
         description="pipe-to-fetch at Spark scale (ganda-compatible surface)",
+        epilog="subcommand: ganda-spark echoserver [-p PORT] [-d DELAY_MILLIS] [-s]",
     )
     p.add_argument("request_file", nargs="?", help="file of URLs/JSON lines (default: stdin)")
     p.add_argument("-W", "--workers", type=int, default=1, help="fetch parallelism")
@@ -53,12 +54,19 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--mock-fetch", action="store_true",
                    help="deterministic offline fetch (no network)")
     p.add_argument("--cores", type=int, default=None, help="local[N] cores")
+    return p
 
-    sub = p.add_subparsers(dest="subcommand")
-    echo = sub.add_parser("echoserver", help="JSON echo server (test fixture)")
-    echo.add_argument("-p", "--port", type=int, default=8080)
-    echo.add_argument("-d", "--delay-millis", type=int, default=0)
-    echo.add_argument("-s", "--silent", action="store_true")
+
+def build_echoserver_parser() -> argparse.ArgumentParser:
+    """`ganda-spark echoserver ...` — dispatched on the first argument
+    before the main parse: an argparse subparser next to the optional
+    request_file positional would read every file name as a subcommand."""
+    p = argparse.ArgumentParser(
+        prog="ganda-spark echoserver", description="JSON echo server (test fixture)"
+    )
+    p.add_argument("-p", "--port", type=int, default=8080)
+    p.add_argument("-d", "--delay-millis", type=int, default=0)
+    p.add_argument("-s", "--silent", action="store_true")
     return p
 
 
@@ -95,9 +103,10 @@ def _config_from(args) -> EngineConfig:
 
 
 def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    if argv[:1] == ["echoserver"]:
+        return run_echoserver(build_echoserver_parser().parse_args(argv[1:]))
     args = build_parser().parse_args(argv)
-    if args.subcommand == "echoserver":
-        return run_echoserver(args)
 
     cfg = _config_from(args)
 

@@ -1,6 +1,7 @@
 """Text analysis for training-data pipelines: language-ID heuristic,
-quality scoring, token counting, document fingerprinting. All pure Column
-expressions (split/filter/aggregate/regexp) — codegen'd, no Python.
+quality scoring, token counting, document fingerprinting. Pure Column
+expressions (split/filter/aggregate/regexp) — codegen'd, no Python —
+except embed_text, one Arrow map stage.
 """
 
 from __future__ import annotations
@@ -235,22 +236,25 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 EMBED_DIMS = 8
 
 
-def _hash_arr_sql(text_col: str, salt: int) -> str:
-    """words → 48-bit salted hash array (one md5 per word per salt)."""
-    return (
-        f"transform(split({text_col}, ' '), w -> "
-        f"CAST(conv(substr(md5(concat('{salt}:', w)), 1, 12), 16, 10) AS BIGINT))"
-    )
+def embed_text(
+    df: DataFrame, text_col: str = "text", dims: int = EMBED_DIMS
+) -> DataFrame:
+    """Feature-extraction stub: a hash-projection bag-of-words embedding —
+    dim j = mean over words of (byte_j(salted md5(w)) − 127.5). The cheap
+    deterministic stand-in for a learned text encoder: preserves bag-of-
+    words similarity (near-duplicate docs land close in cosine), md5-derived
+    so DuckDB reproduces it bit-for-bit.
 
+    Adds: embedding array<double> (centered means) and embedding_bp
+    array<bigint> (exact integer basis points, the cross-engine-stable
+    oracle form: floor(sum·10⁴/n) − 1 275 000).
 
-def _embed_text_arrow(df: DataFrame, text_col: str, dims: int) -> DataFrame:
-    """embed_text as ONE Arrow map stage (guide §4.2): the Catalyst form
-    pays ~2 µs of interpreted lambda per element across ~10 HOF folds per
-    row (hash transforms + per-dim sums) — measured ~11 s for 60k rows at
-    the 10× bench; here each task md5-hashes every DISTINCT word once
-    (hashlib, cached across batches), per-row byte sums are order-free
-    int64 NumPy adds, and the centering arithmetic replicates the Column
-    expression's IEEE op order exactly:
+    ONE Arrow map stage (guide §4.2): each task md5-hashes every DISTINCT
+    word once per salt (hashlib, cached across batches; 6 bytes per
+    48-bit hash), per-row byte sums are order-free int64 NumPy adds — an
+    interpreted fold form measured ~11 s for 60k rows at the 10× bench.
+    Bit-identical to the Catalyst fold in tests/reference/catalyst.py
+    (test-pinned exceptAll-empty both ways):
       * sum_j exact integer (matches the sequential long fold);
       * embedding[j] = (sum_j − 127.5·n)/n — int64→double conversions
         exact below 2^53, one multiply/subtract/divide per element in
@@ -260,7 +264,7 @@ def _embed_text_arrow(df: DataFrame, text_col: str, dims: int) -> DataFrame:
       * NULL text yields arrays of NULL elements (the fold-over-NULL
         shape), split(' ') matches Python str.split(' ') including the
         [''] result for empty text.
-    Equivalence is test-pinned exceptAll-empty both ways."""
+    """
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -334,67 +338,6 @@ def _embed_text_arrow(df: DataFrame, text_col: str, dims: int) -> DataFrame:
 
     return df.mapInPandas(fn, schema).select(
         *cols, "embedding", "embedding_bp"
-    )
-
-
-def embed_text(
-    df: DataFrame,
-    text_col: str = "text",
-    dims: int = EMBED_DIMS,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Feature-extraction stub: a hash-projection bag-of-words embedding —
-    dim j = mean over words of (byte_j(salted md5(w)) − 127.5). The cheap
-    deterministic stand-in for a learned text encoder: preserves bag-of-
-    words similarity (near-duplicate docs land close in cosine), md5-derived
-    so DuckDB reproduces it bit-for-bit. Pure Column expressions: hash
-    arrays are hoisted to named columns (one md5 per word per salt, NOT one
-    per dim — CollapseProject would otherwise inline the transform into all
-    `dims` consumers, like the SimHash lesson in operators/dedup.py).
-
-    Adds: embedding array<double> (centered means) and embedding_bp
-    array<bigint> (exact integer basis points, the cross-engine-stable
-    oracle form: floor(sum·10⁴/n) − 1 275 000).
-    """
-    if use_arrow:
-        return _embed_text_arrow(df, text_col, dims)
-    n_salts = (dims + 5) // 6  # 6 usable bytes per 48-bit hash
-    out = df
-    for s in range(n_salts):
-        out = out.withColumn(f"_eh{s}", F.expr(_hash_arr_sql(text_col, s)))
-    # r7: per-dim fold sums and the word count are HOISTED to named
-    # columns — each sum fold was written out twice (embedding + bp
-    # arrays) and the size(split(...)) fragment once per bp dim, so every
-    # row paid 2·dims interpreted folds and dims splits; named columns
-    # are referenced twice each (non-cheap ⇒ CollapseProject keeps them),
-    # identical arithmetic, identical doubles/longs.
-    out = out.withColumn(
-        "_en", F.expr(f"size(split({text_col}, ' '))")
-    )
-    for j in range(dims):
-        s, byte = divmod(j, 6)
-        out = out.withColumn(
-            f"_es{j}",
-            F.expr(
-                f"aggregate(_eh{s}, 0L, (acc, h) -> acc + ((h >> {8 * byte}) & 255))"
-            ),
-        )
-    n = F.col("_en").cast("long")
-    # integer `div`, not floor(double /): an exactly-divisible quotient
-    # rendered as a double can land a hair under the integer and
-    # mis-floor — exact integer arithmetic end-to-end instead
-    emb = F.array(*[(F.col(f"_es{j}") - 127.5 * n) / n for j in range(dims)])
-    emb_bp = F.array(
-        *[
-            F.expr(f"CAST(_es{j} * 10000L div _en - 1275000 AS BIGINT)")
-            for j in range(dims)
-        ]
-    )
-    return (
-        out.withColumn("embedding", emb)
-        .withColumn("embedding_bp", emb_bp)
-        .drop("_en", *[f"_eh{s}" for s in range(n_salts)],
-              *[f"_es{j}" for j in range(dims)])
     )
 
 

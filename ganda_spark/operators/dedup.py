@@ -3,8 +3,8 @@ SimHash, n-gram Jaccard. (North-rule addition; the reference's only dedup
 stance is "uniqueness is the upstream pipe's job", README.md:28-30.)
 
 Scale posture (100 TB corpus):
-  * Shingling/minhashing are per-row array expressions — NO explode, no
-    shuffle, whole-stage codegen; a signature is k BIGINTs per doc.
+  * Shingling is a per-row array expression and minhashing one Arrow map
+    stage — NO explode, no shuffle; a signature is k BIGINTs per doc.
   * The only shuffle is the LSH band group-join: keyed on (band, band_hash),
     candidate pairs are generated inside buckets — |bucket|² stays tiny when
     bands/rows are tuned (and AQE skew-split covers degenerate buckets).
@@ -80,7 +80,7 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 # (A[s]·h1 + B[s]·h2 + C[s]) mod P, with h1/h2 two INDEPENDENT 48-bit
 # halves of a SINGLE md5 per shingle (hex chars 1-12 and 13-24 of the
 # digest), each reduced mod P. One md5 per shingle instead of k (the md5
-# is ~all the cost of the signature stage; the mixes are integer codegen).
+# is ~all the cost of the signature stage; the mixes are integer arithmetic).
 # Two independent base hashes matter: with one base value, a base-hash
 # collision between two shingles would conflate them under ALL k
 # functions simultaneously (correlated minhash error); requiring both
@@ -97,38 +97,28 @@ MINHASH_C = (15486041, 32452919, 49979801, 67868071,
              86028221, 104395361, 122949899, 1299827)
 
 
-def _minhash_mix(s: int, x: str = "x", y: str = "y") -> str:
-    """SQL fragment (valid in both Spark and DuckDB given non-negative
-    operands): (A·x mod P + B·y mod P + C) mod P via pmod/%."""
-    a, b, c = MINHASH_A[s], MINHASH_B[s], MINHASH_C[s]
-    return (
-        f"pmod(pmod({a} * {x}, {MINHASH_P}) + pmod({b} * {y}, {MINHASH_P})"
-        f" + {c}, {MINHASH_P})"
-    )
+def minhash_signatures(
+    df: DataFrame, k: int = 8, shingle_col: str = "shingles"
+) -> DataFrame:
+    """k min-hashes per doc (sig_0..sig_{k-1}), zero shuffles: the min over
+    the doc's shingles of k pairwise-independent mixes of ONE md5 per
+    shingle, as one Arrow map stage (guide §4.2). Each task md5-hashes
+    every DISTINCT shingle once (hashlib, cached across batches —
+    near-dup corpora repeat shingles heavily) and precomputes its k mixed
+    values; per row the signature is a NumPy column-min over the gathered
+    mix rows. An interpreted fold pays ~2 µs of lambda per element across
+    k+3 higher-order passes per row (~6 ms/row-core on 300-shingle docs).
 
-
-def _minhash_signatures_arrow(df: DataFrame, k: int, shingle_col: str) -> DataFrame:
-    """minhash_signatures as ONE Arrow map stage (guide §4.2): the
-    Catalyst form pays ~2 µs of interpreted lambda per element across
-    k+3 HOF passes per row (md5 transform, two conv transforms, k
-    zip_with-min folds) — ~6 ms/row-core on 300-shingle docs, the
-    dominant stage of every LSH entry's signature build. Each task
-    md5-hashes every DISTINCT shingle once (hashlib, cached across
-    batches — near-dup corpora repeat shingles heavily) and precomputes
-    its k mixed values; per row the signature is a NumPy column-min over
-    the gathered mix rows.
-
-    EXACT by construction: md5 is md5 (hexdigest[:12] / [12:24] = the
-    substr halves), the mix is the same integer arithmetic
-    ((A·h1 mod P + B·h2 mod P + C) mod P — products < 2^58, int64-safe,
-    pmod ≡ % on non-negatives), and min over int64 is order-free. NULL
-    and EMPTY shingle arrays both yield NULL signatures (array_min of
-    null/empty — test-pinned). NULL elements inside the array are
-    undefined input (md5(NULL) poisons the Catalyst fold to NULL-ish
-    shapes; hashlib would raise)."""
+    EXACT, and equal to the Catalyst fold in tests/reference/catalyst.py
+    (test-pinned): h1/h2 = hexdigest[:12] / [12:24] mod P, the mix is
+    (A·h1 mod P + B·h2 mod P + C) mod P — products < 2^58, int64-safe —
+    and min over int64 is order-free. NULL and EMPTY shingle arrays both
+    yield NULL signatures. NULL elements inside the array are undefined
+    input (hashlib raises)."""
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
+    assert k <= len(MINHASH_A)
     mix_consts = [(MINHASH_A[s], MINHASH_B[s], MINHASH_C[s]) for s in range(k)]
     schema = StructType(
         list(df.schema.fields)
@@ -193,44 +183,6 @@ def _minhash_signatures_arrow(df: DataFrame, k: int, shingle_col: str) -> DataFr
     return df.mapInPandas(fn, schema).select(
         *cols, *[f"sig_{s}" for s in range(k)]
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    k: int = 8,
-    shingle_col: str = "shingles",
-    use_arrow: bool = True,
-) -> DataFrame:
-    """k min-hashes per doc, zero shuffles: array_min over pairwise-
-    independent mixes of ONE md5 per shingle (was k salted md5s).
-    r7 default: the Arrow map form (_minhash_signatures_arrow — same
-    hashes, same integer mixes, order-free min; equivalence test-pinned);
-    the Catalyst fold form stays behind use_arrow=False."""
-    assert k <= len(MINHASH_A)
-    if use_arrow:
-        return _minhash_signatures_arrow(df, k, shingle_col)
-    half = "CAST(conv(substr(d, {start}, 12), 16, 10) AS BIGINT)"
-    out = (
-        df.withColumn("_hd", F.expr(f"transform({shingle_col}, sh -> md5(sh))"))
-        .withColumn(
-            "_h1",
-            F.expr(
-                f"transform(_hd, d -> pmod({half.format(start=1)}, {MINHASH_P}))"
-            ),
-        )
-        .withColumn(
-            "_h2",
-            F.expr(
-                f"transform(_hd, d -> pmod({half.format(start=13)}, {MINHASH_P}))"
-            ),
-        )
-    )
-    for s in range(k):
-        out = out.withColumn(
-            f"sig_{s}",
-            F.expr(f"array_min(zip_with(_h1, _h2, (x, y) -> {_minhash_mix(s)}))"),
-        )
-    return out.drop("_hd", "_h1", "_h2")
 
 
 def lsh_band_hashes(sigs: DataFrame, k: int = 8, rows_per_band: int = 2) -> DataFrame:

@@ -5,8 +5,11 @@ Scale posture: brute force is O(Q×N) — correct baseline and fine when the
 query set is small or N is bucketed first. The LSH path buckets the corpus
 by 8-bit hyperplane signatures (pure array expressions, no Python), so the
 expensive pass runs only inside matching buckets: the classic ANN recall/
-cost dial (more planes → smaller buckets). All dot products are JVM
-higher-order functions (zip_with + aggregate) in double — zero UDFs.
+cost dial (more planes → smaller buckets). Pair-scoring joins use JVM
+higher-order functions (zip_with + aggregate) in double; the top-k
+candidate stages, nprobe=1 IVF assignment and the k-means update are Arrow
+map stages that replicate those folds' IEEE op order, pinned against the
+Catalyst forms in tests/reference/catalyst.py.
 
 Hyperplanes are ±1 vectors derived from md5(plane:dim) so any external
 oracle reproduces the buckets exactly.
@@ -16,7 +19,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ganda_spark import cache
@@ -239,57 +242,74 @@ def _topk_candidates_arrow(
     return c.mapInPandas(fn, out_schema)
 
 
+# Largest query set the Arrow top-k candidate stages localize to the
+# driver; above it brute_force_topk/quantized_topk fall back to the
+# broadcast-join form.
+_MAX_LOCAL_QUERIES = 4096
+
+
+def _local_queries(query_ids: DataFrame, id_col: str, vec: Column):
+    """The (id, vec) query rows, collected — or None when there are more
+    than _MAX_LOCAL_QUERIES of them (probed with a limit, never a full
+    collect)."""
+    rows = (
+        query_ids.select(F.col(id_col), vec)
+        .limit(_MAX_LOCAL_QUERIES + 1)
+        .collect()
+    )
+    return rows if len(rows) <= _MAX_LOCAL_QUERIES else None
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (qid, nid, cos) rows under (cos DESC, nid ASC):
+    (qid, nid, rank, cos_r = round(cos, 4))."""
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "qid", "nid", F.col("rank").cast("long").alias("rank"),
+            F.round("cos", 4).alias("cos_r"),
+        )
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     query_ids: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
-    max_local_queries: int = 4096,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (excluding self).
-    One scan of N. r7 default: the candidate stage runs as an Arrow map
-    over the corpus with the (bounded, localized) query set — batch-local
-    top-k pruning, dimension-sequential cosines (bit-exact vs the
-    Catalyst fold, pinned by test) — and only narrow candidate rows reach
-    the per-query window; the final rank and round(cos, 4) are the
-    unchanged Catalyst expressions. The Catalyst join form remains behind
-    use_arrow=False and as the too-many-queries fallback. (Zero-norm
+    One scan of N. The candidate stage runs as an Arrow map over the
+    corpus with the localized query set — batch-local top-k pruning,
+    dimension-sequential cosines (bit-exact vs the join form, pinned by
+    test) — and only narrow candidate rows reach the per-query window;
+    the final rank and round(cos, 4) are Catalyst expressions. Above
+    _MAX_LOCAL_QUERIES queries it falls back to the broadcast-join form,
+    which scores every (corpus, query) pair in Catalyst. (Zero-norm
     vectors take the NaN route in the Arrow stage where ANSI raised —
     the pair scan's documented upgrade.)
 
     Id ordering: the Arrow stage breaks ties in PYTHON's id order, which
     matches Spark's UTF8-byte order only for numeric and ASCII ids (as in
     lsh_verified_pairs); map non-ASCII string ids to a surrogate first."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    if use_arrow:
-        q_rows = (
-            query_ids.select(F.col(id_col), as_double(F.col(vec_col)))
-            .limit(max_local_queries + 1)
-            .collect()
+    q_rows = _local_queries(query_ids, id_col, as_double(F.col(vec_col)))
+    if q_rows is not None:
+        raw = _topk_candidates_arrow(
+            emb, q_rows, k, id_col, vec_col, integer_codes=False
         )
-        if len(q_rows) <= max_local_queries:
-            raw = _topk_candidates_arrow(
-                emb, q_rows, k, id_col, vec_col, integer_codes=False
-            )
-            cand = raw.select(
+        return _rank_topk(
+            raw.select(
                 "qid",
                 "nid",
                 F.when(F.col("_snan"), F.lit(float("nan")))
                 .otherwise(F.col("_score"))
                 .alias("cos"),
-            )
-            return (
-                cand.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(
-                    "qid", "nid", F.col("rank").cast("long").alias("rank"),
-                    F.round("cos", 4).alias("cos_r"),
-                )
-            )
+            ),
+            k,
+        )
     q = query_ids.select(
         F.col(id_col).alias("qid"),
         as_double(F.col(vec_col)).alias("qv"),
@@ -307,14 +327,7 @@ def brute_force_topk(
             cosine_pre(F.col("qv"), F.col("qn"), F.col("nv"), F.col("nn")).alias("cos"),
         )
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "qid", "nid", F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 4).alias("cos_r"),
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def hyperplane_signs(n_planes: int, dim: int) -> list[list[int]]:
@@ -374,7 +387,7 @@ def _ivf_assign_arrow(
     ZERO exchanges where the aggregate form shuffled N full rows.
 
     EXACTNESS (the max_by(cid, struct(cos, −cid)) contract, test-pinned
-    against the Catalyst form):
+    against the Catalyst aggregate in tests/reference/catalyst.py):
       * dots and both norms accumulate dimension-sequentially (the
         _pair_dup_arrays IEEE-op-sequence contract); cosine is the same
         one-product-one-divide as cosine_pre;
@@ -460,12 +473,9 @@ def _ivf_assign_arrow(
             out[out_id] = [cids[b] for b in best]
             yield out
 
-    if not cent_rows:
-        # empty centroid table: the Catalyst join+agg yields zero rows
-        return emb.limit(0).mapInPandas(assign_fn, schema).select(
-            id_col, *[c for c in cols if c != id_col], out_id
-        )
-    return emb.mapInPandas(assign_fn, schema).select(
+    # empty centroid table: zero rows, like the reference join+aggregate
+    src = emb if cent_rows else emb.limit(0)
+    return src.mapInPandas(assign_fn, schema).select(
         id_col, *[c for c in cols if c != id_col], out_id
     )
 
@@ -477,35 +487,33 @@ def ivf_assign(
     vec_col: str = "embedding",
     nprobe: int = 1,
     out_id: str = "list_id",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """IVF coarse quantization: each vector joins its `nprobe`
     nearest-centroid inverted lists (cosine, ties by centroid id). The
-    centroid table is tiny (C rows) and broadcast.
+    centroid table is tiny (C rows).
 
     nprobe=1 — the CORPUS-side assignment, the big side of every IVF /
-    k-means / SemDeDup plan — is an argmax AGGREGATE
-    (max_by over the (cos, −cid) struct), not a window: the window form
-    shuffled the full N×C candidate expansion (embedding arrays included)
-    through the per-vector sort — measured ~700 MB of shuffle per assign
-    at just 24k×64 in the r5 rehearsal, and N×C rows at 10^10×4096 is a
-    non-starter. The aggregate gets map-side partial combine, so the
-    exchange carries N rows (one running best per vector per mapper).
-    Tie semantics are IDENTICAL to the window (cos DESC, cid ASC): the
-    lexicographic struct max breaks equal cosines by larger −cid = lower
-    cid, and full-struct ties pin the same cid by construction.
+    k-means / SemDeDup plan — is one Arrow map stage over the localized
+    centroid table (_ivf_assign_arrow): a per-row argmax, zero exchanges.
+    A window form would shuffle the full N×C candidate expansion
+    (embedding arrays included) through a per-vector sort — measured
+    ~700 MB of shuffle per assign at just 24k×64 in the r5 rehearsal.
+    Centroid ids must be NUMERIC (the reference argmax aggregate it is
+    pinned against negates the id to break ties).
 
     nprobe>1 — the QUERY side, orders of magnitude smaller — keeps the
-    per-vector top-nprobe window (never a global window).
-
-    CONTRACT (nprobe=1 branch, asserted below): centroid ids must be
-    NUMERIC (tie-breaking negates the id inside the max_by struct) and
-    vector ids unique (the aggregate F.first-collapses duplicate id_col
-    rows). The nprobe>1 window branch orders by _cid ASC directly and
-    works for any orderable id type — callers with string centroid ids
-    must map them to a numeric surrogate first (ADVICE r5)."""
-    from pyspark.sql import Window
-
+    per-vector top-nprobe window over the broadcast centroid join (never
+    a global window). It orders by centroid id directly and works for any
+    orderable id type."""
+    if nprobe == 1:
+        cid_type = dict(centroids.dtypes)[id_col]
+        if cid_type in ("string", "binary", "boolean"):
+            raise TypeError(
+                f"ivf_assign nprobe=1 requires a numeric centroid id "
+                f"(got {id_col}: {cid_type}); map to a numeric surrogate "
+                f"or use nprobe>1"
+            )
+        return _ivf_assign_arrow(emb, centroids, id_col, vec_col, out_id)
     c = F.broadcast(
         centroids.select(
             F.col(id_col).alias("_cid"),
@@ -528,23 +536,6 @@ def ivf_assign(
         )
         .drop("_cv", "_cn")
     )
-    if nprobe == 1:
-        cid_type = dict(centroids.dtypes)[id_col]
-        if cid_type in ("string", "binary", "boolean"):
-            raise TypeError(
-                f"ivf_assign nprobe=1 requires a numeric centroid id "
-                f"(got {id_col}: {cid_type}); map to a numeric surrogate "
-                f"or use nprobe>1"
-            )
-        if use_arrow:
-            return _ivf_assign_arrow(emb, centroids, id_col, vec_col, out_id)
-        others = [col for col in emb.columns if col != id_col]
-        return scored.groupBy(id_col).agg(
-            *[F.first(col).alias(col) for col in others],
-            F.max_by(
-                F.col("_cid"), F.struct(F.col("_ccos"), (-F.col("_cid")).alias("_nc"))
-            ).alias(out_id),
-        )
     w = Window.partitionBy(id_col).orderBy(F.col("_ccos").desc(), F.col("_cid").asc())
     return (
         scored.withColumn("_crk", F.row_number().over(w))
@@ -554,25 +545,19 @@ def ivf_assign(
     )
 
 
-def ivf_topk(
+def _ivf_probe_topk(
     emb: DataFrame,
     query_ids: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    centroids: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """IVF approximate top-k — the second scale path next to the LSH
-    buckets: coarse-quantize the corpus into C inverted lists (centroids =
-    the first C corpus vectors by id: deterministic, oracle-reproducible;
-    swap in k-means centroids in production without touching the plan),
-    probe each query's `nprobe` nearest lists, score exactly inside them.
-    Recall dial = nprobe/C. One corpus scan to assign + a candidate join
-    keyed on list_id (the only shuffle)."""
-    from pyspark.sql import Window
-
-    centroids = emb.where(F.col(id_col) < n_centroids)
+    """IVF probe/score plan shared by ivf_topk and ivf_kmeans_topk: assign
+    the corpus to its nearest list, each query to its `nprobe` nearest,
+    score exactly inside the probed lists (one candidate join keyed on
+    list_id, the only shuffle) and rank."""
     corpus = ivf_assign(emb, centroids, id_col, vec_col, nprobe=1).select(
         F.col(id_col).alias("nid"),
         as_double(F.col(vec_col)).alias("nv"),
@@ -593,14 +578,28 @@ def ivf_topk(
             cosine_pre(F.col("qv"), F.col("qn"), F.col("nv"), F.col("nn")).alias("cos"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "qid", "nid", F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 4).alias("cos_r"),
-        )
+    return _rank_topk(scored, k)
+
+
+def ivf_topk(
+    emb: DataFrame,
+    query_ids: DataFrame,
+    k: int = 5,
+    n_centroids: int = 16,
+    nprobe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF approximate top-k — the second scale path next to the LSH
+    buckets: coarse-quantize the corpus into C inverted lists (centroids =
+    the first C corpus vectors by id: deterministic, oracle-reproducible;
+    swap in k-means centroids in production without touching the plan),
+    probe each query's `nprobe` nearest lists, score exactly inside them.
+    Recall dial = nprobe/C. One corpus scan to assign + a candidate join
+    keyed on list_id (the only shuffle)."""
+    centroids = emb.where(F.col(id_col) < n_centroids)
+    return _ivf_probe_topk(
+        emb, query_ids, centroids, k, nprobe, id_col, vec_col
     )
 
 
@@ -611,139 +610,46 @@ def kmeans_centroids(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    wide_dim_limit: int = 256,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """DataFrame-native Lloyd's iterations for IVF coarse quantization
     (VERDICT r3 #2): seeded by the deterministic first-C-by-id picks, each
-    fixed iteration assigns every vector to its nearest centroid
-    (`ivf_assign`, broadcast centroids — one corpus scan) and recomputes
-    each list's mean.
+    fixed iteration assigns every vector to its nearest centroid and
+    recomputes each list's mean (_kmeans_update_arrow, one Arrow pass).
 
     Determinism contract: the update step runs in INTEGER basis points —
     per-dimension `sum(round(v[d]·10⁴))` then integer `div` by the list
     count — because float sums are order-dependent under Spark's partial
     aggregation, and the DuckDB oracle must reproduce the centroids
-    bit-for-bit. The mean is `dim` independent long-sum aggregates in ONE
-    groupBy (no posexplode shuffle); cosine assignment then runs on the
-    de-scaled doubles, same fold order both engines.
+    bit-for-bit. The update emits (list, pos, sum) partials keyed on
+    (list_id, pos) — no per-dimension aggregate columns, so there is no
+    width ceiling at production embedding widths (1k-4k). Cosine
+    assignment runs on the de-scaled doubles, same fold order both
+    engines. Bit-identical to the Catalyst Lloyd's loop in
+    tests/reference/catalyst.py (test-pinned).
 
     Empty lists simply vanish (their centroid attracted no vectors) —
     standard Lloyd's degeneracy, fine for IVF where C ≪ N. Returns
-    (id_col, vec_col) shaped like a centroid table for `ivf_assign`.
-
-    WIDTH CEILING (VERDICT r5 wrong #3): the wide form builds `dim`
-    independent sum aggregates in one groupBy — exact and fast at dim 64,
-    but at production embedding widths (1k-4k) that is a 4k-column
-    aggregate row and a 4k-expression codegen unit. Above
-    `wide_dim_limit` (default 256) the update switches to the TALL form:
-    posexplode to (list_id, pos, val) rows, ONE sum aggregate keyed on
-    (list_id, pos), re-assembled with array_sort — identical integer
-    arithmetic, identical centroids (equivalence is test-pinned), one
-    narrow shuffle of N·dim skinny rows instead of a wide aggregate."""
+    (id_col, vec_col) shaped like a centroid table for `ivf_assign`;
+    with iters ≥ 1 it is localized (C rows)."""
     cent = emb.where(F.col(id_col) < n_centroids).select(
         F.col(id_col).cast("long").alias(id_col), as_double(F.col(vec_col)).alias(vec_col)
     )
-    if use_arrow and iters > 0:
-        # r7 (guide §5): ONE persisted skinny (vec, bp) projection shared
-        # by every iteration — each Arrow update otherwise re-derived the
-        # corpus plan (parquet scan + caller's union/cast chain) per
-        # iteration. Every iteration is collect-localized (C rows, the
-        # established exact round-trip), so the cache can be released
-        # before returning and no consumer re-enters the Lloyd's chain.
-        with cache.scope():
-            rows = cache.persist(_kmeans_rows(emb, vec_col))
-            for _ in range(iters):
-                cent = _kmeans_update_arrow(
-                    emb, cent, dim, id_col, vec_col, rows=rows
-                )
-                cent = emb.sparkSession.createDataFrame(
-                    cent.collect(), f"{id_col} long, {vec_col} array<double>"
-                )
+    if iters <= 0:
         return cent
-    for it in range(iters):
-        if use_arrow:
-            cent = _kmeans_update_arrow(emb, cent, dim, id_col, vec_col)
-        else:
-            # Catalyst reference paths (wide/tall), kept for the
-            # use_arrow=False cross-check pinned by test
-            assigned = ivf_assign(emb, cent, id_col, vec_col, nprobe=1)
-            cent = _kmeans_update_catalyst(
-                assigned, dim, wide_dim_limit, id_col, vec_col
-            )
-        # r7 (guide §5): LOCALIZE each INTERMEDIATE iteration's centroid
-        # table (C rows — bounded by definition) so iteration i+1 starts
-        # from a LocalRelation instead of re-evaluating the whole nested
-        # Lloyd's chain per action (measured 6.7 s → 3.8 s for the
-        # 2-iteration localized form at sf0.1). The LAST iteration stays
-        # lazy: localized_kmeans_centroids — the multi-consumer entrypoint
-        # — collects it exactly once. Identical values: the collect/
-        # createDataFrame round-trip of longs and doubles is exact.
-        if it < iters - 1:
+    # r7 (guide §5): ONE persisted skinny (vec, bp) projection shared by
+    # every iteration — each update otherwise re-derived the corpus plan
+    # (parquet scan + caller's union/cast chain) per iteration. Every
+    # iteration is collect-localized (C rows, an exact round-trip of longs
+    # and doubles), so the cache can be released before returning and no
+    # consumer re-enters the Lloyd's chain.
+    with cache.scope():
+        rows = cache.persist(_kmeans_rows(emb, vec_col))
+        for _ in range(iters):
+            cent = _kmeans_update_arrow(rows, cent, dim, id_col, vec_col)
             cent = emb.sparkSession.createDataFrame(
                 cent.collect(), f"{id_col} long, {vec_col} array<double>"
             )
     return cent
-
-
-def _kmeans_update_catalyst(
-    assigned: DataFrame,
-    dim: int,
-    wide_dim_limit: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """One Lloyd's update from an assigned corpus — the r6 Catalyst forms
-    (wide ≤ wide_dim_limit, tall above), kept as the use_arrow=False
-    reference implementation and cross-check (equivalence test-pinned)."""
-    if dim <= wide_dim_limit:
-        sums = [
-            F.sum(
-                F.round(F.col(vec_col)[d].cast("double") * 10000).cast("long")
-            ).alias(f"_s{d}")
-            for d in range(dim)
-        ]
-        upd = assigned.groupBy("list_id").agg(*sums, F.count("*").alias("_n"))
-        return upd.select(
-            F.col("list_id").cast("long").alias(id_col),
-            F.array(
-                *[
-                    (F.expr(f"_s{d} div _n") / F.lit(10000.0)).cast("double")
-                    for d in range(dim)
-                ]
-            ).alias(vec_col),
-        )
-    tall = assigned.select(
-        "list_id",
-        F.posexplode(
-            F.expr(
-                f"transform({vec_col}, v -> "
-                "CAST(round(CAST(v AS DOUBLE) * 10000) AS BIGINT))"
-            )
-        ).alias("_pos", "_bp"),
-    )
-    upd = tall.groupBy("list_id", "_pos").agg(
-        F.sum("_bp").alias("_s"), F.count(F.lit(1)).alias("_n")
-    )
-    return (
-        upd.groupBy("list_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("_pos"),
-                        (F.expr("_s div _n") / F.lit(10000.0))
-                        .cast("double")
-                        .alias("_m"),
-                    )
-                )
-            ).alias("_pm")
-        )
-        .select(
-            F.col("list_id").cast("long").alias(id_col),
-            F.expr("transform(_pm, x -> x._m)").alias(vec_col),
-        )
-    )
 
 
 def _kmeans_rows(emb: DataFrame, vec_col: str) -> DataFrame:
@@ -760,21 +666,22 @@ def _kmeans_rows(emb: DataFrame, vec_col: str) -> DataFrame:
 
 
 def _kmeans_update_arrow(
-    emb: DataFrame,
+    rows: DataFrame,
     cent: DataFrame,
     dim: int,
     id_col: str,
     vec_col: str,
-    rows: DataFrame | None = None,
 ) -> DataFrame:
-    """One Lloyd's update as a SINGLE Arrow pass (guide §4.2): per
-    partition, NumPy computes each row's nearest centroid and accumulates
-    per-list integer bp sums — replacing the N×C broadcast-nested-loop
-    expansion, the first(embedding) SortAggregate, and the wide update
-    aggregate with one map stage plus a C×dim skinny-row sum (measured
-    13.5 s → ~4 s for 2 iterations at 10× sf0.1).
+    """One Lloyd's update over the _kmeans_rows projection as a SINGLE
+    Arrow pass (guide §4.2): per partition, NumPy computes each row's
+    nearest centroid and accumulates per-list integer bp sums — replacing
+    an N×C broadcast-nested-loop expansion, a first(embedding)
+    SortAggregate and a wide update aggregate with one map stage plus a
+    C×dim skinny-row sum (measured 13.5 s → ~4 s for 2 iterations at 10×
+    sf0.1).
 
-    EXACTNESS by construction, not accident:
+    EXACTNESS by construction, pinned against the Catalyst Lloyd's loop in
+    tests/reference/catalyst.py:
       * assignment cosines accumulate dimension-sequentially (the
         _pair_dup_arrays contract — per row the IEEE op sequence of the
         aggregate(zip_with) fold), centroid norms likewise, division is
@@ -786,26 +693,22 @@ def _kmeans_update_arrow(
       * the summed values are NOT re-rounded in Python: Spark's own
         Round(v·10⁴) HALF_UP runs in a Catalyst projection and ships as
         int64 — the NumPy stage only adds integers (order-free, exact),
-        and the final per-(list, pos) sum + `div` reassembly is the
-        r6 tall form verbatim.
+        and the final per-(list, pos) sum + `div` reassembly is exact
+        integer arithmetic.
 
     Contract: vectors of exactly `dim` elements (rows of any other
-    length are skipped — the Catalyst forms produced NULL-poisoned
+    length are skipped — the Catalyst form produces NULL-poisoned
     groups for them; both behaviors are undefined input)."""
     import pandas as pd
 
-    spark = emb.sparkSession
     cent_rows = sorted(
         (int(r[0]), [float(x) for x in r[1]]) for r in cent.collect()
     )
     schema = "list_id long, _pos int, _s long, _n long"
     if not cent_rows:
-        return _kmeans_update_catalyst(
-            spark.createDataFrame([], f"list_id long, {vec_col} array<double>"),
-            dim, dim + 1, id_col, vec_col,
+        return rows.sparkSession.createDataFrame(
+            [], f"{id_col} long, {vec_col} array<double>"
         )
-    if rows is None:
-        rows = _kmeans_rows(emb, vec_col)
 
     def partials(it):
         import numpy as np
@@ -885,7 +788,6 @@ def _kmeans_update_arrow(
     )
 
 
-
 def ivf_kmeans_topk(
     emb: DataFrame,
     query_ids: DataFrame,
@@ -905,39 +807,11 @@ def ivf_kmeans_topk(
     r7: centroids are LOCALIZED (C-row collect) — the corpus and probe
     assignments are two plan branches, and a lazy centroid chain was
     re-evaluated once per branch (guide §5)."""
-    from pyspark.sql import Window
-
     centroids = localized_kmeans_centroids(
         emb, n_centroids, iters, dim, id_col, vec_col
     )
-    corpus = ivf_assign(emb, centroids, id_col, vec_col, nprobe=1).select(
-        F.col(id_col).alias("nid"),
-        as_double(F.col(vec_col)).alias("nv"),
-        norm(as_double(F.col(vec_col))).alias("nn"),
-        "list_id",
-    )
-    probes = ivf_assign(query_ids, centroids, id_col, vec_col, nprobe=nprobe).select(
-        F.col(id_col).alias("qid"),
-        as_double(F.col(vec_col)).alias("qv"),
-        norm(as_double(F.col(vec_col))).alias("qn"),
-        "list_id",
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "list_id")
-        .where(F.col("qid") != F.col("nid"))
-        .select(
-            "qid", "nid",
-            cosine_pre(F.col("qv"), F.col("qn"), F.col("nv"), F.col("nn")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "qid", "nid", F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 4).alias("cos_r"),
-        )
+    return _ivf_probe_topk(
+        emb, query_ids, centroids, k, nprobe, id_col, vec_col
     )
 
 
@@ -1267,7 +1141,6 @@ def quantized_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Scalar-quantized ANN: candidates are scored with the EXACT integer
     dot over int8-quantized vectors (cheap, cache-friendly, deterministic),
@@ -1276,30 +1149,23 @@ def quantized_topk(
     set. The classic memory/recall dial: refine ↑ → recall → 1.
 
     Plan (r7): the integer candidate stage runs as an Arrow map over the
-    corpus with the (bounded, localized) quantized query set — batch-
-    local top-(k·refine) pruning, integer dots exact in any order — so
-    the per-query window sees narrow candidate rows instead of the full
-    N×Q expansion CARRYING both double arrays (the r6 form's window
-    exchange shipped ~1 KB of vector payload per pair and paid one
-    interpreted zip_with fold each: measured 12.1 s → ~2 s at the 10×
-    bench). The k·refine survivors then re-attach their double vectors
-    by id (survivor-broadcast joins) and the exact-cosine re-rank and
-    round are the UNCHANGED Catalyst expressions. The Catalyst candidate
-    join remains behind use_arrow=False (equivalence test-pinned) and as
-    the too-many-queries fallback.
+    corpus with the localized quantized query set — batch-local
+    top-(k·refine) pruning, integer dots exact in any order — so the
+    per-query window sees narrow candidate rows instead of the full N×Q
+    expansion CARRYING both double arrays (the r6 form's window exchange
+    shipped ~1 KB of vector payload per pair and paid one interpreted
+    zip_with fold each: measured 12.1 s → ~2 s at the 10× bench). The
+    k·refine survivors then re-attach their double vectors by id
+    (survivor-broadcast joins) and the exact-cosine re-rank and round are
+    Catalyst expressions. Above _MAX_LOCAL_QUERIES queries the candidate
+    stage falls back to the broadcast-join form (equivalence
+    test-pinned).
 
     Id ordering: numeric or ASCII ids only, as in brute_force_topk."""
-    from pyspark.sql import Window
-
     qz = quantize_unit_col(F.col(vec_col))
-    q_rows = (
-        query_ids.select(F.col(id_col), qz).limit(4097).collect()
-        if use_arrow
-        else [None] * 4097
-    )
     wi = Window.partitionBy("qid").orderBy(F.col("iscore").desc(), F.col("nid").asc())
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    if use_arrow and len(q_rows) <= 4096:
+    q_rows = _local_queries(query_ids, id_col, qz)
+    if q_rows is not None:
         cand = _topk_candidates_arrow(
             emb, q_rows, k * refine, id_col, vec_col,
             integer_codes=True, code_expr=qz,
@@ -1320,14 +1186,7 @@ def quantized_topk(
             .join(F.broadcast(qv_tbl), "qid")
             .select("qid", "nid", cosine(F.col("qv"), F.col("nv")).alias("cos"))
         )
-        return (
-            survivors.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "qid", "nid", F.col("rank").cast("long").alias("rank"),
-                F.round("cos", 4).alias("cos_r"),
-            )
-        )
+        return _rank_topk(survivors, k)
     c = emb.select(
         F.col(id_col).alias("nid"), as_double(F.col(vec_col)).alias("nv"),
         qz.alias("nq"),
@@ -1348,14 +1207,7 @@ def quantized_topk(
         .where(F.col("_irk") <= k * refine)
         .select("qid", "nid", cosine(F.col("qv"), F.col("nv")).alias("cos"))
     )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "qid", "nid", F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 4).alias("cos_r"),
-        )
-    )
+    return _rank_topk(survivors, k)
 
 
 def ann_topk(
@@ -1375,8 +1227,6 @@ def ann_topk(
     version joined a separate (id, bucket) table back onto the corpus,
     which shuffled the corpus against itself and computed the plane dot
     products twice."""
-    from pyspark.sql import Window
-
     b = bucket_col(n_planes, dim, vec_col)
     q = query_ids.select(
         F.col(id_col).alias("qid"),
@@ -1397,15 +1247,7 @@ def ann_topk(
             cosine_pre(F.col("qv"), F.col("qn"), F.col("nv"), F.col("nn")).alias("cos"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "qid", "nid", F.col("rank").cast("long").alias("rank"),
-            F.round("cos", 4).alias("cos_r"),
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def code_key_col(vec_col: Column) -> Column:

@@ -47,9 +47,13 @@ def _line_col(cfg: EngineConfig, columns: list[str]):
     return plain_output(F.col("body"), cfg.response_body)
 
 
-def emit_stdout(results: DataFrame, cfg: EngineConfig, out: TextIO = sys.stdout) -> int:
+def emit_stdout(
+    results: DataFrame, cfg: EngineConfig, out: TextIO | None = None
+) -> int:
     """K1: ordered line printer — `line + "\\n"` per non-empty emit
-    (responses/responses.go:91-103). Returns lines written."""
+    (responses/responses.go:91-103) to `out`, default the sys.stdout of
+    the call (not of the import). Returns lines written."""
+    out = sys.stdout if out is None else out
     lines = (
         results.select("seq", _line_col(cfg, results.columns).alias("line"))
         .where(F.col("line").isNotNull())
@@ -64,10 +68,12 @@ def emit_stdout(results: DataFrame, cfg: EngineConfig, out: TextIO = sys.stdout)
 
 
 def emit_status_log(
-    results: DataFrame, cfg: EngineConfig, err: TextIO = sys.stderr
+    results: DataFrame, cfg: EngineConfig, err: TextIO | None = None
 ) -> None:
     """K3: `Response: <code> <url>` per response; <400 green / ≥400 red in
-    color mode; nothing when silent (logger/logger.go:34-66)."""
+    color mode; nothing when silent (logger/logger.go:34-66). `err`
+    defaults to the sys.stderr of the call."""
+    err = sys.stderr if err is None else err
     if cfg.silent:
         return
     rows = results.select("seq", "status", "url", "fetch_error").orderBy("seq")

@@ -6,8 +6,10 @@ transform × envelope matrix is pinned cheaply in tests/test_transforms.py.
 
 from __future__ import annotations
 
+import io
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -116,7 +118,7 @@ def test_reference_flag_surface_parses_verbatim():
     alias must be accepted verbatim by the argparse surface — a ganda
     script switching to ganda-spark must not need flag edits. In-process
     (no SparkSession) so the sweep is cheap."""
-    from ganda_spark.cli import build_parser
+    from ganda_spark.cli import build_echoserver_parser, build_parser
 
     p = build_parser()
     args = p.parse_args([
@@ -150,10 +152,39 @@ def test_reference_flag_surface_parses_verbatim():
     short = p.parse_args(["-B", "raw", "-H", "K: v", "-k", "-J", "-X", "PUT",
                           "-s", "-W", "3"])
     assert (short.response_body, short.request, short.workers) == ("raw", "PUT", 3)
-    # echoserver subcommand flags (cli/cli.go:157-176)
-    e = p.parse_args(["echoserver", "--port", "9999", "--delay-millis", "50",
-                      "--silent"])
+    # the optional request file is a positional, never a subcommand name
+    assert p.parse_args(["-s", "urls.txt"]).request_file == "urls.txt"
+    # echoserver subcommand flags (cli/cli.go:157-176), parsed after
+    # main() dispatches on the leading `echoserver`
+    e = build_echoserver_parser().parse_args(
+        ["--port", "9999", "--delay-millis", "50", "--silent"]
+    )
     assert (e.port, e.delay_millis, e.silent) == (9999, 50, True)
+
+
+def test_cli_reads_positional_request_file(spark, monkeypatch, capfd, tmp_path):
+    """`ganda-spark <request_file>` fetches the file's URLs (argparse used
+    to read the file name as a subcommand and exit 2) and emits the same
+    lines, in input order, as the same URLs piped on stdin. In-process on
+    the test session."""
+    from pyspark.sql import SparkSession
+
+    from ganda_spark import cli
+
+    lines = "".join(f"http://example.com/p{i}\n" for i in range(6))
+    req = tmp_path / "urls.txt"
+    req.write_text(lines)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    args = ["--mock-fetch", "-s", "-B", "sha256"]
+    assert cli.main([*args, str(req)]) == 0
+    from_file = capfd.readouterr().out.splitlines()
+    monkeypatch.setattr(sys, "stdin", io.TextIOWrapper(io.BytesIO(lines.encode())))
+    assert cli.main(args) == 0
+    from_stdin = capfd.readouterr().out.splitlines()
+    # one sha256 line per 200 response (the mock web fails a few URLs)
+    assert 0 < len(from_file) <= 6
+    assert all(re.fullmatch("[0-9a-f]{64}", line) for line in from_file)
+    assert from_file == from_stdin
 
 
 def test_cli_empty_input_is_clean_noop():

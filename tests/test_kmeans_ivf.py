@@ -15,6 +15,7 @@ from ganda_spark.operators.similarity import (
     ivf_topk,
     kmeans_centroids,
 )
+from tests.reference import catalyst as ref
 
 DIM = 8
 
@@ -179,9 +180,9 @@ def test_semantic_dedup_threshold_and_determinism(spark, sf_dir):
 def test_ivf_assign_corpus_side_is_aggregate_not_window(spark, sf_dir):
     """The nprobe=1 corpus assignment must never plan as the window form
     that shuffles the full N×C candidate expansion (the r5 rehearsal
-    scale fix). r7 default: ONE Arrow map stage — no Window, no Exchange
-    at all; the use_arrow=False reference keeps the argmax-aggregate
-    shape. The query side (nprobe>1) legitimately keeps its per-vector
+    scale fix). Production: ONE Arrow map stage — no Window, no Exchange
+    at all; the Catalyst reference it is pinned against keeps the
+    argmax-aggregate shape. The query side (nprobe>1) legitimately keeps its per-vector
     top-nprobe window."""
     from ganda_spark.operators.similarity import ivf_assign
 
@@ -195,7 +196,7 @@ def test_ivf_assign_corpus_side_is_aggregate_not_window(spark, sf_dir):
     assert "MapInPandas" in corpus_plan
     assert "Exchange" not in corpus_plan
     catalyst_plan = (
-        ivf_assign(emb, cent, nprobe=1, use_arrow=False)
+        ref.ivf_assign(emb, cent)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Window" not in catalyst_plan
@@ -205,21 +206,3 @@ def test_ivf_assign_corpus_side_is_aggregate_not_window(spark, sf_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Window" in probe_plan
-
-
-def test_kmeans_tall_update_equals_wide(spark, sf_dir):
-    """The posexplode-sum (tall) centroid update above wide_dim_limit must
-    produce bit-identical centroids to the wide per-dim aggregate form —
-    same integer basis-point arithmetic, different plan shape."""
-    from ganda_spark.operators.similarity import kmeans_centroids
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    wide = kmeans_centroids(emb, n_centroids=8, iters=2, dim=64,
-                            wide_dim_limit=256)
-    tall = kmeans_centroids(emb, n_centroids=8, iters=2, dim=64,
-                            wide_dim_limit=0)
-    w = {r.vec_id: r.embedding for r in wide.collect()}
-    t = {r.vec_id: r.embedding for r in tall.collect()}
-    assert set(w) == set(t)
-    for k in w:
-        assert w[k] == t[k], k

@@ -4,11 +4,16 @@ OPTIMIZATION_r07.md claims rest on."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import math
+import os
 import random
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.reference import catalyst as ref
 
 
 # --- take_best two-level top-k (VERDICT r6 wrong #1) -----------------------
@@ -279,10 +284,10 @@ def test_semantic_incremental_numpy_equals_join_fallback(spark):
 
 
 def test_minhash_signatures_arrow_equals_catalyst(spark, sf_dir):
-    """The Arrow signature stage must be bit-identical to the Catalyst
-    fold form: same md5 halves, same integer mixes, same mins — on real
-    shingled docs plus NULL and EMPTY shingle arrays (both NULL sigs)
-    and unicode shingles."""
+    """The Arrow signature stage must be bit-identical to the reference
+    Catalyst fold: same md5 halves, same integer mixes, same mins — on
+    real shingled docs plus NULL and EMPTY shingle arrays (both NULL
+    sigs) and unicode shingles."""
     import __spark_entry__ as entry
     from ganda_spark.operators.dedup import minhash_signatures, with_shingles
 
@@ -299,8 +304,8 @@ def test_minhash_signatures_arrow_equals_catalyst(spark, sf_dir):
         "doc_id long, shingles array<string>",
     )
     df = docs.unionByName(edge).persist()
-    a = minhash_signatures(df, k=8, use_arrow=True)
-    c = minhash_signatures(df, k=8, use_arrow=False)
+    a = minhash_signatures(df, k=8)
+    c = ref.minhash_signatures(df, k=8)
     sel = ["doc_id"] + [f"sig_{s}" for s in range(8)]
     assert a.select(sel).exceptAll(c.select(sel)).count() == 0
     assert c.select(sel).exceptAll(a.select(sel)).count() == 0
@@ -311,8 +316,8 @@ def test_minhash_signatures_arrow_equals_catalyst(spark, sf_dir):
 
 
 def test_embed_text_arrow_equals_catalyst(spark, sf_dir):
-    """The Arrow embedding must be bit-identical to the Catalyst fold
-    form on real docs plus edge rows: NULL text (arrays of NULL
+    """The Arrow embedding must be bit-identical to the reference Catalyst
+    fold on real docs plus edge rows: NULL text (arrays of NULL
     elements), empty text (the [''] split), unicode, repeated words."""
     from ganda_spark.functions.text import embed_text
 
@@ -330,17 +335,17 @@ def test_embed_text_arrow_equals_catalyst(spark, sf_dir):
         "doc_id long, text string",
     )
     df = docs.unionByName(edge)
-    a = embed_text(df, use_arrow=True).select(
+    a = embed_text(df).select(
         "doc_id", "embedding", "embedding_bp"
     )
-    c = embed_text(df, use_arrow=False).select(
+    c = ref.embed_text(df).select(
         "doc_id", "embedding", "embedding_bp"
     )
     assert a.exceptAll(c).count() == 0
     assert c.exceptAll(a).count() == 0
 
 
-# --- Arrow top-k candidate stages ≡ Catalyst join+window forms -------------
+# --- Arrow top-k candidate stages ≡ Catalyst join+window fallbacks ---------
 
 
 def _topk_fixture(spark, with_nan=True):
@@ -357,9 +362,26 @@ def _topk_fixture(spark, with_nan=True):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_brute_topk_arrow_equals_catalyst(spark):
+def _topk_both_paths(monkeypatch, run, queries):
+    """run() with the query-localization limit at exactly the query count
+    (the Arrow candidate stage) and one below it (the broadcast-join
+    fallback); asserts which plan each executed."""
+    import ganda_spark.operators.similarity as sim
+
+    out = []
+    n = queries.count()
+    for limit, arrow in ((n, True), (n - 1, False)):
+        monkeypatch.setattr(sim, "_MAX_LOCAL_QUERIES", limit)
+        df = run()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInPandas" in plan) == arrow, limit
+        out.append(df.collect())
+    return out
+
+
+def test_brute_topk_arrow_equals_catalyst(spark, monkeypatch):
     """The Arrow candidate stage must reproduce the Catalyst broadcast-
-    join + window form row-for-row: exact ranks, bit-exact rounded
+    join + window fallback row-for-row: exact ranks, bit-exact rounded
     cosines, NaN candidates ranked first, NULL (cross-length / NULL-
     vector / NULL-element) candidates last, self-pair excluded."""
     from ganda_spark.operators.similarity import brute_force_topk
@@ -367,13 +389,12 @@ def test_brute_topk_arrow_equals_catalyst(spark):
     emb = _topk_fixture(spark).persist()
     q = emb.where((F.col("vec_id") % 29 == 0) | (F.col("vec_id") >= 400))
     key = lambda r: (r.qid, r.rank, r.nid, repr(r.cos_r))  # noqa: E731
-    a = brute_force_topk(emb, q, k=5, use_arrow=True).collect()
-    c = brute_force_topk(emb, q, k=5, use_arrow=False).collect()
+    a, c = _topk_both_paths(monkeypatch, lambda: brute_force_topk(emb, q, k=5), q)
     assert sorted(map(key, a)) == sorted(map(key, c))
     emb.unpersist()
 
 
-def test_quantized_topk_arrow_equals_catalyst(spark):
+def test_quantized_topk_arrow_equals_catalyst(spark, monkeypatch):
     """Same contract for the quantized candidate stage: identical
     survivor sets under the integer order (exact in any summation
     order), identical exact-cosine re-rank."""
@@ -382,8 +403,9 @@ def test_quantized_topk_arrow_equals_catalyst(spark):
     emb = _topk_fixture(spark, with_nan=False).persist()
     q = emb.where((F.col("vec_id") % 29 == 0) | (F.col("vec_id") >= 400))
     key = lambda r: (r.qid, r.rank, r.nid, repr(r.cos_r))  # noqa: E731
-    a = quantized_topk(emb, q, k=5, refine=3, use_arrow=True).collect()
-    c = quantized_topk(emb, q, k=5, refine=3, use_arrow=False).collect()
+    a, c = _topk_both_paths(
+        monkeypatch, lambda: quantized_topk(emb, q, k=5, refine=3), q
+    )
     assert sorted(map(key, a)) == sorted(map(key, c))
     emb.unpersist()
     # small corpus whose k·refine cutoff reaches integer score 0: the
@@ -400,8 +422,9 @@ def test_quantized_topk_arrow_equals_catalyst(spark):
         "vec_id long, embedding array<double>",
     )
     q0 = small.where(F.col("vec_id") == 0)
-    a = quantized_topk(small, q0, k=3, refine=1, dim=4, use_arrow=True).collect()
-    c = quantized_topk(small, q0, k=3, refine=1, dim=4, use_arrow=False).collect()
+    a, c = _topk_both_paths(
+        monkeypatch, lambda: quantized_topk(small, q0, k=3, refine=1, dim=4), q0
+    )
     assert [r.nid for r in sorted(c, key=lambda r: r.rank)] == [1, 2, 3]
     assert sorted(map(key, a)) == sorted(map(key, c))
 
@@ -456,8 +479,8 @@ def test_lsh_verified_pairs_equals_two_step(spark, sf_dir):
 
 
 def test_ivf_assign_arrow_equals_catalyst(spark):
-    """The Arrow map-stage assignment must reproduce the Catalyst
-    max_by(cid, struct(cos, −cid)) row-for-row: random rows, exact
+    """The Arrow map-stage assignment must reproduce the reference Catalyst
+    max_by(cid, struct(cos, −cid)) aggregate row-for-row: random rows, exact
     centroid ties (equal cosines → lowest cid), NaN elements (NaN
     ordered above every double), mixed-length rows (length matches no
     centroid → NULL everywhere → lowest cid), NULL vectors, and the
@@ -479,8 +502,8 @@ def test_ivf_assign_arrow_equals_catalyst(spark):
         [(i, [1.0 if d == i else 0.0 for d in range(6)]) for i in range(4)],
         "vec_id long, embedding array<double>",
     )
-    a = ivf_assign(emb, cent, use_arrow=True)
-    c = ivf_assign(emb, cent, use_arrow=False)
+    a = ivf_assign(emb, cent)
+    c = ref.ivf_assign(emb, cent)
     assert a.columns == c.columns
     key = lambda r: (r.vec_id, r.tag, r.list_id)  # noqa: E731
     assert sorted(map(key, a.collect())) == sorted(map(key, c.collect()))
@@ -591,10 +614,13 @@ def test_jaccard_local_gates_fall_back_to_shuffle_join(spark):
     assert "MapInPandas" not in fb._jdf.queryExecution().executedPlan().toString()
 
 
-def test_kmeans_arrow_update_equals_catalyst(spark):
+def test_kmeans_arrow_update_equals_catalyst(spark, sf_dir):
     """The Arrow (NumPy) Lloyd's update must produce BIT-IDENTICAL
-    centroids to the r6 Catalyst wide/tall forms — assignment argmax,
-    NaN ordering, integer bp sums and the div reassembly all replicated."""
+    centroids to the reference Catalyst loop (max_by assignment, wide
+    integer-bp update) — assignment argmax, NaN ordering, integer bp sums
+    and the div reassembly all replicated: random 6-dim rows at 1 and 2
+    iterations, and the sf embeddings at dim 64, 8 centroids, 2
+    iterations."""
     from ganda_spark.operators.similarity import kmeans_centroids
 
     rng = random.Random(23)
@@ -602,16 +628,30 @@ def test_kmeans_arrow_update_equals_catalyst(spark):
         (i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(300)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for iters in (1, 2):
-        a = kmeans_centroids(emb, 8, iters, 6, use_arrow=True).collect()
-        c = kmeans_centroids(emb, 8, iters, 6, use_arrow=False).collect()
+    sf_emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    for df, iters, dim in ((emb, 1, 6), (emb, 2, 6), (sf_emb, 2, 64)):
+        a = kmeans_centroids(df, 8, iters, dim).collect()
+        c = ref.kmeans_centroids(df, 8, iters, dim).collect()
         ka = sorted((r[0], tuple(r[1])) for r in a)
         kc = sorted((r[0], tuple(r[1])) for r in c)
-        assert ka == kc, f"iters={iters}"
-    # tall-form reference above the width ceiling, same data
-    t = kmeans_centroids(
-        emb, 8, 2, 6, use_arrow=False, wide_dim_limit=3
-    ).collect()
-    kt = sorted((r[0], tuple(r[1])) for r in t)
-    a2 = kmeans_centroids(emb, 8, 2, 6, use_arrow=True).collect()
-    assert sorted((r[0], tuple(r[1])) for r in a2) == kt
+        assert ka and ka == kc, f"iters={iters} dim={dim}"
+
+
+def test_no_use_arrow_parameter_in_production():
+    """One production path per operator: no function in ganda_spark/ or
+    __spark_entry__.py declares a `use_arrow` selector. The Catalyst forms
+    the Arrow stages are pinned against live in tests/reference/."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = glob.glob(os.path.join(repo, "ganda_spark", "**", "*.py"), recursive=True)
+    files.append(os.path.join(repo, "__spark_entry__.py"))
+    found = []
+    for path in files:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                params = a.posonlyargs + a.args + a.kwonlyargs
+                if any(p.arg == "use_arrow" for p in params):
+                    found.append(f"{os.path.relpath(path, repo)}:{node.lineno}")
+    assert not found, found
