@@ -206,3 +206,18 @@ def test_ivf_assign_corpus_side_is_aggregate_not_window(spark, sf_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Window" in probe_plan
+
+
+def test_kmeans_tall_update_equals_wide(spark, sf_dir):
+    """The production centroid update (long (list, pos, sum) partials, no
+    per-dimension aggregate columns) must produce bit-identical centroids
+    to the reference wide per-dim aggregate form — same integer
+    basis-point arithmetic, different plan shape."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    tall = kmeans_centroids(emb, n_centroids=8, iters=2, dim=64)
+    wide = ref.kmeans_centroids(emb, n_centroids=8, iters=2, dim=64)
+    w = {r.vec_id: r.embedding for r in wide.collect()}
+    t = {r.vec_id: r.embedding for r in tall.collect()}
+    assert w and set(w) == set(t)
+    for k in w:
+        assert w[k] == t[k], k
